@@ -11,9 +11,11 @@ second credential path to manage.
 
 from __future__ import annotations
 
+import functools
 import posixpath
 import re
 import time
+from types import SimpleNamespace
 from typing import Any, Dict, List, Optional, Tuple
 
 from pyspark.sql import SparkSession
@@ -47,11 +49,13 @@ def normalize_path(path: str) -> str:
 
 
 def _fs_for(spark: SparkSession, path: str) -> Tuple[Any, Any]:
-    """(FileSystem, jvm) for a URI, via the session's Hadoop conf."""
+    """(FileSystem, jvm) for a URI, via the session's Hadoop conf.
+
+    Resolved through ``Path`` rather than ``java.net.URI.create`` so
+    unescaped names (spaces, ``%``) work as they do everywhere else.
+    """
     jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    uri = jvm.java.net.URI.create(normalize_path(path))
-    fs = jvm.org.apache.hadoop.fs.FileSystem.get(uri, hconf)
+    fs = _hpath(jvm, path).getFileSystem(spark._jsc.hadoopConfiguration())
     return fs, jvm
 
 
@@ -66,6 +70,71 @@ def _strip_scheme(uri: str) -> str:
 
 # above this many immediate children, listing fans out as a Spark job
 _PARALLEL_LIST_CHILD_THRESHOLD = 32
+
+
+@functools.lru_cache(maxsize=1)
+def _jvm_handles(jvm: Any) -> SimpleNamespace:
+    """JVM classes and helpers the listings need, resolved once per Py4J
+    JVM view (each fully-qualified class lookup is several round trips).
+
+    Py4J cannot build Java lambdas, so ``to_uri`` (``FileStatus`` ->
+    ``getPath().toString()``) and ``is_dir`` (``isDirectory()``) are
+    method-handle proxies for ``java.util.function.Function`` and
+    ``Predicate``; they let a whole listing be mapped and filtered
+    inside the JVM.
+
+    Relies on Spark-internal APIs, exercised on Spark 4.x (Scala 2.13):
+    ``SparkHadoopUtil.listLeafStatuses`` (``private[spark]``),
+    ``PythonRDD.serveIterator`` with ``pyspark.util._load_from_socket``,
+    and ``scala.jdk.javaapi.CollectionConverters``, which exists from
+    Scala 2.13 only (hence the ``pyspark>=4.0`` floor). Only
+    ``list_objects``'s driver route and ``list_directories`` use them.
+    """
+    invoke = jvm.java.lang.invoke
+    lookup = invoke.MethodHandles.publicLookup()
+    path = jvm.org.apache.hadoop.fs.Path
+    path_cls = path._java_lang_class
+    status_cls = jvm.org.apache.hadoop.fs.FileStatus._java_lang_class
+    get_path = lookup.findVirtual(status_cls, "getPath", invoke.MethodType.methodType(path_cls))
+    to_string = lookup.findVirtual(
+        path_cls, "toString", invoke.MethodType.methodType(jvm.java.lang.String._java_lang_class)
+    )
+    is_dir = lookup.findVirtual(
+        status_cls, "isDirectory", invoke.MethodType.methodType(jvm.java.lang.Boolean.TYPE)
+    )
+    proxy = invoke.MethodHandleProxies.asInterfaceInstance
+    return SimpleNamespace(
+        to_uri=proxy(
+            jvm.java.util.function.Function._java_lang_class,
+            invoke.MethodHandles.filterReturnValue(get_path, to_string),
+        ),
+        is_dir=proxy(jvm.java.util.function.Predicate._java_lang_class, is_dir),
+        hadoop_util=jvm.org.apache.spark.deploy.SparkHadoopUtil.get(),
+        remote_iterators=jvm.org.apache.hadoop.util.functional.RemoteIterators,
+        converters=jvm.scala.jdk.javaapi.CollectionConverters,
+        python_rdd=jvm.org.apache.spark.api.python.PythonRDD,
+    )
+
+
+def _status_uris(spark: SparkSession, statuses: Any, only_dirs: bool = False) -> List[str]:
+    """``Path.toString()`` of every ``FileStatus`` in a JVM list
+    (directories only with ``only_dirs``), mapped inside the JVM and
+    streamed back over PySpark's local collect socket.
+
+    A constant number of Py4J round trips whatever the list's size, and
+    no Spark job. The socket, not a Py4J return value, carries the
+    strings: a Py4J reply over 8 KB stalls ~40 ms on TCP delayed ACK.
+    """
+    from pyspark.serializers import UTF8Deserializer
+    from pyspark.util import _load_from_socket
+
+    j = _jvm_handles(spark._jvm)
+    stream = statuses.stream()
+    if only_dirs:
+        stream = stream.filter(j.is_dir)
+    uris = j.converters.asScala(stream.map(j.to_uri).iterator())
+    sock_info = j.python_rdd.serveIterator(uris, "serve s3 listing")
+    return list(_load_from_socket(sock_info, UTF8Deserializer()))
 
 
 def _hidden_under_prefix(prefix_uri: str, file_uri: str) -> bool:
@@ -103,7 +172,9 @@ def list_objects(
     as a distributed job across executors, the same parallel partition
     discovery a big scan uses), so a many-million-object prefix never
     serializes on one driver-side walk. Small prefixes keep the cheap
-    single-RPC driver listing.
+    driver listing: one JVM-side walk whose URIs come back in a
+    constant number of Py4J round trips whatever the object count, and
+    no Spark job.
 
     Ref: /root/reference/awswrangler/s3/_list.py ``list_objects``.
     """
@@ -131,19 +202,18 @@ def list_objects(
         if suffix is not None:
             listing = listing.filter(F.col("path").endswith(suffix))
         return sorted(r["path"] for r in listing.collect())
-    out: List[str] = []
-    it = fs.listFiles(hpath, True)
-    while it.hasNext():
-        status = it.next()
-        uri = status.getPath().toString()
-        # same hidden rule as the distributed route (Spark's file index):
-        # markers (_SUCCESS, .crc) and metadata dirs (_delta_log/…) out
-        if _hidden_under_prefix(path, uri):
-            continue
-        if suffix is not None and not uri.endswith(suffix):
-            continue
-        out.append(uri)
-    return sorted(out)
+    # Spark's listStatus walk, not fs.listFiles: the local FS's listFiles
+    # builds a LocatedFileStatus per file, whose permission lookup forks
+    # a shell when native Hadoop is absent (~3 ms a file)
+    j = _jvm_handles(jvm)
+    leaves = j.converters.asJava(j.hadoop_util.listLeafStatuses(fs, hpath))
+    # same hidden rule as the distributed route (Spark's file index):
+    # markers (_SUCCESS, .crc) and metadata dirs (_delta_log/…) out
+    return sorted(
+        uri
+        for uri in _status_uris(spark, leaves)
+        if not _hidden_under_prefix(path, uri) and (suffix is None or uri.endswith(suffix))
+    )
 
 
 def list_directories(path: str, spark: Optional[SparkSession] = None) -> List[str]:
@@ -156,11 +226,8 @@ def list_directories(path: str, spark: Optional[SparkSession] = None) -> List[st
     hpath = _hpath(jvm, path)
     if not fs.exists(hpath):
         return []
-    out = []
-    for status in fs.listStatus(hpath):
-        if status.isDirectory():
-            out.append(status.getPath().toString() + "/")
-    return sorted(out)
+    children = _jvm_handles(jvm).remote_iterators.toList(fs.listStatusIterator(hpath))
+    return sorted(uri + "/" for uri in _status_uris(spark, children, only_dirs=True))
 
 
 def does_object_exist(path: str, spark: Optional[SparkSession] = None) -> bool:

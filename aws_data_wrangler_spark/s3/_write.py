@@ -49,14 +49,14 @@ def _cast_dtype(df: DataFrame, dtype: Optional[Dict[str, str]]) -> DataFrame:
 
 
 def _partitions_values(
-    path: str, partition_cols: List[str], spark: SparkSession
+    path: str, partition_cols: List[str], objects: List[str]
 ) -> Dict[str, List[str]]:
-    """{partition_dir_uri: [values...]} for the written dataset, mirroring
-    the reference's to_parquet return payload."""
+    """{partition_dir_uri: [values...]} over a dataset's object listing,
+    mirroring the reference's to_parquet return payload."""
     out: Dict[str, List[str]] = {}
     root = normalize_path(path).rstrip("/")
     root_schemeless = root.split("://", 1)[-1]
-    for obj in list_objects(path, spark=spark):
+    for obj in objects:
         # Hadoop renders file:/x, we normalize file:///x — compare scheme-less
         obj_schemeless = obj.split(":", 1)[-1].lstrip("/")
         rel = obj_schemeless[len(root_schemeless.lstrip("/")):].lstrip("/")
@@ -184,25 +184,22 @@ def _write(
         writer = writer.partitionBy(*partition_cols)
     if mode == "append":
         writer = writer.mode("append")
-    elif mode == "overwrite":
-        # full-prefix replacement: static overwrite semantics
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "static")
-        writer = writer.mode("overwrite")
-    else:  # overwrite_partitions
-        # Glue-style partition replacement == Spark dynamic partition overwrite.
-        # Without partition_cols the reference degrades to full overwrite
-        # (/root/reference/awswrangler/s3/_write_dataset.py:68).
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        writer = writer.mode("overwrite")
-    try:
-        writer.save(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    else:
+        # the per-write option beats the session's
+        # spark.sql.sources.partitionOverwriteMode, which stays untouched.
+        # overwrite: full-prefix replacement (static). overwrite_partitions:
+        # Glue-style partition replacement == Spark dynamic partition
+        # overwrite; without partition_cols the reference degrades to a
+        # full overwrite (awswrangler s3/_write_dataset.py)
+        overwrite_mode = "static" if mode == "overwrite" else "dynamic"
+        writer = writer.mode("overwrite").option("partitionOverwriteMode", overwrite_mode)
+    writer.save(path)
 
-    paths = list_objects(path, spark=spark, suffix=None)
+    # one listing serves both halves of the payload
+    paths = list_objects(path, spark=spark)
     result: Dict[str, Any] = {
         "paths": paths,
-        "partitions_values": _partitions_values(path, partition_cols, spark) if partition_cols else {},
+        "partitions_values": _partitions_values(path, partition_cols, paths) if partition_cols else {},
     }
     if database and table:
         from aws_data_wrangler_spark import catalog
@@ -276,6 +273,14 @@ def to_parquet(
     point-lookup complement to ``sort_cols``/Z-order at 100 TB.
     ``bloom_filter_ndv`` sizes the filters (expected distinct values
     per row group; the writer default otherwise).
+
+    Returns ``{"paths": [...], "partitions_values": {...}}``. With
+    ``dataset=True``, ``paths`` is every data object under ``path``
+    after the write and ``partitions_values`` maps every partition
+    directory present to its values, as on-disk names (Spark escapes
+    e.g. ``:`` to ``%3A``). Unlike awswrangler 1.x, these are not only
+    the objects and partitions this call wrote. A single-file write
+    returns ``[path]`` and ``{}``.
     """
     _pop_noop_kwargs(options)
     options.setdefault("compression", compression or "none")
@@ -341,6 +346,14 @@ def to_csv(
 
     ``columns`` writes a subset; catalog-metadata kwargs as in
     ``to_parquet``.
+
+    Returns ``{"paths": [...], "partitions_values": {...}}``. With
+    ``dataset=True``, ``paths`` is every data object under ``path``
+    after the write and ``partitions_values`` maps every partition
+    directory present to its values, as on-disk names (Spark escapes
+    e.g. ``:`` to ``%3A``). Unlike awswrangler 1.x, these are not only
+    the objects and partitions this call wrote. A single-file write
+    returns ``[path]`` and ``{}``.
     """
     _pop_noop_kwargs(options)
     options.setdefault("sep", sep)
@@ -481,6 +494,14 @@ def to_orc(
     declares ``timestamp`` — the parquet reader coerces that
     mismatch, the ORC reader refuses it (ORC_TYPE_CAST), so the cast
     must happen at write time. Pathless round-trips keep NTZ intact.
+
+    Returns ``{"paths": [...], "partitions_values": {...}}``. With
+    ``dataset=True``, ``paths`` is every data object under ``path``
+    after the write and ``partitions_values`` maps every partition
+    directory present to its values, as on-disk names (Spark escapes
+    e.g. ``:`` to ``%3A``). Unlike awswrangler 1.x, these are not only
+    the objects and partitions this call wrote. A single-file write
+    returns ``[path]`` and ``{}``.
     """
     _pop_noop_kwargs(options)
     if sanitize_columns:

@@ -44,6 +44,59 @@ class TestParquetDataset:
         assert n_r == 10
         assert n_other == lineitem.filter(F.col("l_returnflag") != "R").count()
 
+    def test_write_leaves_session_overwrite_mode_alone(self, spark, lineitem, tmp_prefix):
+        # the dataset modes pick static/dynamic per write; a caller's
+        # session setting (here Spark's own default, static) survives
+        # every mode, and overwrite_partitions still replaces only the
+        # partitions it touches
+        key = "spark.sql.sources.partitionOverwriteMode"
+        out = f"{tmp_prefix}/ds"
+        sample = lineitem.limit(200)
+        patch = sample.filter(F.col("l_returnflag") == "R").limit(3)
+        prior = spark.conf.get(key)
+        spark.conf.set(key, "static")
+        try:
+            for mode, df in (("overwrite", sample), ("append", sample), ("overwrite_partitions", patch)):
+                s3.to_parquet(df, out, dataset=True, partition_cols=["l_returnflag"], mode=mode)
+                assert spark.conf.get(key) == "static", mode
+        finally:
+            spark.conf.set(key, prior)
+        back = s3.read_parquet(out, dataset=True)
+        assert back.filter(F.col("l_returnflag") == "R").count() == 3
+        n_other = sample.filter(F.col("l_returnflag") != "R").count()
+        assert back.filter(F.col("l_returnflag") != "R").count() == 2 * n_other
+
+    def test_write_payload(self, spark, tmp_prefix):
+        # paths = every data object under the prefix after the write;
+        # partitions_values = every partition present, values as the
+        # on-disk directory names (Spark escapes ':' to '%3A')
+        df = spark.createDataFrame(
+            [(1, "a:b", "x"), (2, "a:b", "y"), (3, "c", "x")], "v int, p string, q string"
+        )
+        out = f"{tmp_prefix}/payload"
+        res = s3.to_parquet(df, out, dataset=True, partition_cols=["p", "q"], mode="overwrite")
+        assert res["partitions_values"] == {
+            f"file://{out}/p=a%3Ab/q=x/": ["a%3Ab", "x"],
+            f"file://{out}/p=a%3Ab/q=y/": ["a%3Ab", "y"],
+            f"file://{out}/p=c/q=x/": ["c", "x"],
+        }
+        assert res["paths"] == s3.list_objects(out)
+        assert {f"file://{p[len('file:'):].rsplit('/', 1)[0]}/" for p in res["paths"]} == set(
+            res["partitions_values"]
+        )
+
+        res = s3.to_parquet(
+            df.filter("p = 'c'"), out, dataset=True, partition_cols=["p", "q"], mode="append"
+        )
+        assert len(res["partitions_values"]) == 3  # every partition present, not only the touched one
+        assert res["paths"] == s3.list_objects(out)
+
+        flat = f"{tmp_prefix}/flat"
+        res = s3.to_parquet(df, flat, dataset=True, mode="overwrite")
+        assert res["partitions_values"] == {}
+        assert res["paths"] == s3.list_objects(flat)
+        assert len(res["paths"]) >= 1
+
     def test_invalid_mode_raises(self, spark, lineitem, tmp_prefix):
         from aws_data_wrangler_spark.exceptions import InvalidArgumentValue
 
@@ -420,7 +473,8 @@ class TestObjectOps:
         # Spark's file index prunes those subtrees recursively, so the
         # driver walk must too — the result set cannot depend on which
         # route the child-count heuristic picks (partition-style '_x=1'
-        # dirs survive, matching Spark's '=' exception)
+        # dirs survive, matching Spark's '=' exception). Awkward names
+        # come back unescaped, in Path.toString() form, on both routes.
         import os
 
         base = f"{tmp_prefix}/hid"
@@ -429,16 +483,93 @@ class TestObjectOps:
         s3.to_parquet(lineitem.limit(1), f"{base}/_staging/part.parquet")
         s3.to_parquet(lineitem.limit(1), f"{base}/.trash/part.parquet")
         s3.to_parquet(lineitem.limit(1), f"{base}/_yr=2024/part.parquet")
-        local = base.replace("file://", "")
-        with open(os.path.join(local, "_SUCCESS"), "w") as f:
-            f.write("")
+        awkward = "k=a b,c;d%e é/k2=v2/part-0.parquet"
+        for rel in (
+            "_SUCCESS",
+            awkward,
+            "k=plain/k2=ü/part-1.parquet",
+            "k=plain/k2=ü/readme.txt",
+            "k=plain/_SUCCESS",
+            "_temporary/0/task/part-2.parquet",
+            ".spark-staging-x/k=plain/part-3.parquet",
+        ):
+            os.makedirs(os.path.dirname(os.path.join(base, rel)), exist_ok=True)
+            with open(os.path.join(base, rel), "w") as f:
+                f.write("x")  # the file-index route skips empty files
+        os.makedirs(os.path.join(base, "empty_dir"))
+        expected = {f"{base}/d{i:02d}/part.parquet" for i in range(34)} | {
+            f"{base}/_yr=2024/part.parquet",
+            f"{base}/{awkward}",
+            f"{base}/k=plain/k2=ü/part-1.parquet",
+            f"{base}/k=plain/k2=ü/readme.txt",
+        }
+        expected = {f"file:{p}" for p in expected}
+
         driver_walk = s3.list_objects(base, distributed=False)
-        dist = s3.list_objects(base, distributed=True)
-        assert dist == driver_walk
-        names = {p.rsplit("/hid/", 1)[1] for p in driver_walk}
-        assert not any(n.startswith(("_staging/", ".trash/")) for n in names)
-        assert "_yr=2024/part.parquet" in names
-        assert len(driver_walk) == 35  # 34 data files + the partition-dir file
+        assert driver_walk == sorted(expected)
+        assert s3.list_objects(base, distributed=True) == driver_walk
+        assert s3.list_objects(base) == driver_walk  # >32 children: auto-distributed
+
+        parquet = sorted(p for p in expected if p.endswith(".parquet"))
+        for distributed in (False, True):
+            assert s3.list_objects(base, suffix=".parquet", distributed=distributed) == parquet
+            # a single-file path lists as itself
+            assert s3.list_objects(f"{base}/{awkward}", distributed=distributed) == [
+                f"file:{base}/{awkward}"
+            ]
+        assert s3.list_objects(f"{base}/empty_dir", distributed=False) == []
+        assert s3.list_objects(f"{base}/k=plain", distributed=False) == [
+            f"file:{base}/k=plain/k2=ü/part-1.parquet",
+            f"file:{base}/k=plain/k2=ü/readme.txt",
+        ]
+
+    def test_driver_listing_round_trips_do_not_grow_with_files(self, spark, tmp_prefix, monkeypatch):
+        # the driver route crosses Py4J a fixed number of times, however
+        # many objects it lists
+        import os
+
+        client = spark.sparkContext._gateway._gateway_client
+
+        def round_trips(n_files):
+            base = f"{tmp_prefix}/rt{n_files}"
+            for i in range(n_files):
+                os.makedirs(f"{base}/day={i % 4}", exist_ok=True)
+                with open(f"{base}/day={i % 4}/part-{i:04d}.parquet", "w") as f:
+                    f.write("x")
+            assert len(s3.list_objects(base, distributed=False)) == n_files  # warm caches
+            calls = []
+            send = client.send_command
+
+            def counting(*args, **kwargs):
+                calls.append(1)
+                return send(*args, **kwargs)
+
+            with monkeypatch.context() as m:
+                m.setattr(client, "send_command", counting)
+                listed = s3.list_objects(base, distributed=False)
+            assert len(listed) == n_files
+            return len(calls)
+
+        small, large = round_trips(20), round_trips(200)
+        assert small == large
+        assert small < 40
+
+    def test_dataset_write_lists_once(self, spark, lineitem, tmp_prefix, monkeypatch):
+        from aws_data_wrangler_spark.s3 import _write
+
+        calls = []
+        real = _write.list_objects
+
+        def counting(*args, **kwargs):
+            calls.append(args)
+            return real(*args, **kwargs)
+
+        monkeypatch.setattr(_write, "list_objects", counting)
+        s3.to_parquet(
+            lineitem.limit(20), f"{tmp_prefix}/once", dataset=True,
+            partition_cols=["l_returnflag"], mode="overwrite",
+        )
+        assert len(calls) == 1
 
     def test_copy_and_merge(self, spark, lineitem, tmp_prefix):
         src, dst = f"{tmp_prefix}/src", f"{tmp_prefix}/dst"
