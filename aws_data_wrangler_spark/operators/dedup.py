@@ -1449,105 +1449,6 @@ def embedding_near_dup_incremental(
     )
 
 
-def _two_level_assign(points: DataFrame, centroids: DataFrame) -> DataFrame:
-    """Nearest-cell assignment for centroid tables too large for one
-    plan literal (> ~1e5 cells): the standard IVF two-level coarse
-    quantizer, kept corpus-shuffle-free end to end.
-
-    Level 1: ~√k super-centroids (a deterministic cid-ordered
-    subsample of the centroid table) ship as a nested-array literal;
-    each point picks its nearest super-cell inside a Project — zero
-    shuffle. Level 2: every centroid is assigned to its super-cell
-    the same way (centroid-table-sized work, trivial), grouped into
-    ONE row per super-cell carrying a cid-sorted children array; a
-    broadcast-hash equi-join on the super-cell id hands each point
-    exactly one children array (no fan-out), and the final argmax
-    happens in-array in the same Project. The only join is
-    broadcast-hash on a ≤√k-cardinality key; there is no n×k fan-out
-    and no corpus-keyed shuffle. nprobe=1, so points near super-cell
-    borders may land in a neighboring child cell — the standard IVF
-    coarse-assignment approximation (SemDeDup clusters are a pruning
-    device, not a deliverable).
-
-    Input (``__id``, ``__v``, ``__norm``); output adds ``__cell`` and
-    the truncated ``__ccos`` — the ``semdedup`` assignment contract.
-    """
-    from aws_data_wrangler_spark.operators import similarity as _sim
-
-    cents = centroids.select(
-        F.col("cid").cast("int").alias("cid"),
-        F.col("cvec").cast("array<double>").alias("cvec"),
-    )
-    n_cells = cents.count()
-    n_super = max(1, min(1024, int(n_cells ** 0.5) + 1))
-    sup_rows = cents.orderBy("cid").limit(n_super).collect()
-    sup_vecs = [[float(x) for x in r["cvec"]] for r in sup_rows]
-    # level 2 prep: children arrays per super-cell (centroid-sized job)
-    cnorm = F.sqrt(
-        F.aggregate(
-            F.transform(F.col("cvec"), lambda x: x * x), F.lit(0.0), lambda a, x: a + x
-        )
-    )
-    ckeys = _sim.cell_key_array(F.col("cvec"), sup_vecs, metric="cosine", norm_expr=cnorm)
-    children = (
-        cents.withColumn(
-            "__scell",
-            F.array_position(ckeys, F.array_min(ckeys)).cast("int"),
-        )
-        .groupBy("__scell")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct(F.col("cid"), F.col("cvec")))
-            ).alias("__children")
-        )
-    )
-    pkeys = _sim.cell_key_array(
-        F.col("__v"), sup_vecs, metric="cosine", norm_expr=F.col("__norm")
-    )
-    assigned = (
-        points.withColumn(
-            "__scell", F.array_position(pkeys, F.array_min(pkeys)).cast("int")
-        )
-        # LEFT join: a degenerate point (null vector → null keys → null
-        # super-cell) keeps its row with null __cell/__ccos — the flat
-        # path's behavior (no within-cell pairs, implicitly kept) —
-        # instead of silently disappearing from the dedup verdicts
-        .join(F.broadcast(children), "__scell", "left")
-        .withColumn(
-            "__ckeys",
-            F.transform(
-                F.col("__children"),
-                lambda ch: -(
-                    F.aggregate(
-                        F.zip_with(F.col("__v"), ch["cvec"], lambda x, y: x * y),
-                        F.lit(0.0),
-                        lambda a, x: a + x,
-                    )
-                    / (
-                        F.col("__norm")
-                        * F.sqrt(
-                            F.aggregate(
-                                F.transform(ch["cvec"], lambda x: x * x),
-                                F.lit(0.0),
-                                lambda a, x: a + x,
-                            )
-                        )
-                    )
-                ),
-            ),
-        )
-        .withColumn(
-            "__cpos", F.array_position(F.col("__ckeys"), F.array_min(F.col("__ckeys"))).cast("int")
-        )
-        .select(
-            "__id", "__v", "__norm",
-            F.element_at(F.col("__children"), F.col("__cpos"))["cid"].alias("__cell"),
-            trunc_digits(-F.element_at(F.col("__ckeys"), F.col("__cpos"))).alias("__ccos"),
-        )
-    )
-    return assigned
-
-
 def semdedup(
     df: DataFrame,
     id_col: str = "vec_id",
@@ -1579,30 +1480,19 @@ def semdedup(
     oracle despite k-means being iterative. ``centroids=None`` trains
     in-line (deterministic init, Lloyd ``iterations``).
 
-    Plan shape, built for 100 TB: assignment is a ZERO-SHUFFLE
-    literal-argmin projection — the centroid table ships as one
-    nested-array plan literal and every row computes its cosine array
-    + argmax inside the same Project (no crossJoin, no per-row-keyed
-    window, no Exchange between the scan and the cell id) — so
-    ``num_clusters`` is bounded by what folds into a sane plan
-    constant: ~10⁵ (the SemDeDup paper's regime; ~50 MB at 64 dims).
-    Do NOT size it corpus/1000 on a huge corpus — train the ~10⁵
-    centroids on a ``sampling.hash_sample`` instead (cells get
-    bigger, and the cell-keyed pair miner's per-cell quadratic cost
-    is the knob you re-balance with ``eps`` and cell count). Beyond
-    10⁵ cells, assignment automatically routes through a TWO-LEVEL
-    coarse quantizer: points argmin over ~√k super-cells (literal
-    projection), then a broadcast-hash equi-join delivers that
-    super-cell's children array and the final argmax happens
-    in-array — still no n×k fan-out and no corpus-keyed shuffle
-    anywhere (standard IVF nprobe=1 assignment, so cluster borders
-    are approximate at that scale, exactly as FAISS coarse
-    assignment is). Inline training still warns past 10⁵ and refuses
-    past 10⁶ (train on a sample instead). The pair miner is a
-    cell-keyed equi-join whose fan-out is the cell size; grouping
-    reuses ``cluster_pairs`` (near-dup groups are tiny — pass
-    ``checkpoint='reliable'`` on long cluster runs); the keep window
-    shards by group. No corpus×corpus join anywhere.
+    Plan shape, built for 100 TB: assignment is
+    ``similarity.assign_cells``'s zero-shuffle nearest-cell projection
+    (cosine keys), routed by its one flat-vs-two-level rule — so no
+    crossJoin, no per-row-keyed window and no corpus-keyed shuffle at
+    any cell count. Do NOT size ``num_clusters`` corpus/1000 on a huge
+    corpus — train ~10⁵ centroids on a ``sampling.hash_sample`` instead
+    (cells get bigger, and the cell-keyed pair miner's per-cell
+    quadratic cost is the knob you re-balance with ``eps`` and cell
+    count). Inline training warns past 10⁵ and refuses past 10⁶. The
+    pair miner is a cell-keyed equi-join whose fan-out is the cell
+    size; grouping reuses ``cluster_pairs`` (near-dup groups are tiny —
+    pass ``checkpoint='reliable'`` on long cluster runs); the keep
+    window shards by group. No corpus×corpus join anywhere.
 
     Ref: the reference has no semantic-dedup analog; semantics follow
     the cluster→within-cluster-cosine→keep-one construction, with the
@@ -1620,62 +1510,36 @@ def semdedup(
         import warnings
 
         warnings.warn(
-            f"num_clusters={num_clusters} > 1e5: the broadcast nested-loop "
-            "assignment costs O(n*k) dot products and a k-row broadcast — "
+            f"num_clusters={num_clusters} > 1e5: inline k-means costs O(n*k) "
+            "dot products per Lloyd round and the assignment goes two-level — "
             "prefer ~1e5 sample-trained centroids (see docstring).",
             stacklevel=2,
         )
-    vec = F.col(vec_col).cast("array<double>")
-    norm_expr = F.sqrt(
-        F.aggregate(F.transform(vec, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x)
-    )
-    points = df.select(F.col(id_col).alias("__id"), vec.alias("__v"), norm_expr.alias("__norm"))
     from pyspark.sql import Window
 
     from aws_data_wrangler_spark.operators import similarity as _sim
 
+    vec = F.col(vec_col).cast("array<double>")
+    points = df.select(
+        F.col(id_col).alias("__id"), vec.alias("__v"), _sim._l2_norm(vec).alias("__norm")
+    )
     cent_lists = None
     if centroids is None:
         cent_lists = _sim._train_ivf_lists(df, num_clusters, iterations, id_col, vec_col)
-    else:
-        n_cells = centroids.count()  # centroid tables are artifact-sized
-        if n_cells <= 100_000:
-            cent_lists = _sim.collect_centroids(centroids)
-    # flat literal-argmin assignment while the centroid literal stays a
-    # sane plan constant (≤1e5 cells AND ≤4M doubles ≈ 32 MB); beyond,
-    # two-level coarse quantization — both corpus-shuffle-free
-    flat = cent_lists is not None and (
-        len(cent_lists[0]) * (len(cent_lists[1][0]) if cent_lists[1] else 0) <= 4_000_000
-    )
     # cache: the assigned table backs BOTH renamed pair-join branches
     # (toDF branches canonicalize to different exchanges — the known
     # recompute trap) plus the verdict join
-    if flat:
-        cent_ids, cent_vecs = cent_lists
-        keys = _sim.cell_key_array(
-            F.col("__v"), cent_vecs, metric="cosine", norm_expr=F.col("__norm")
+    assigned = (
+        _sim._nearest_cells(
+            points, ["__id", "__v", "__norm"], F.col("__v"), F.col("__norm"), "cosine",
+            centroids=centroids, cent_lists=cent_lists,
         )
-        assigned = (
-            points.withColumn("__keys", keys)
-            .withColumn(
-                "__pos",
-                F.array_position(F.col("__keys"), F.array_min(F.col("__keys"))).cast("int"),
-            )
-            .select(
-                "__id", "__v", "__norm",
-                F.element_at(
-                    _sim._nested_lit(cent_ids, "array<int>"), F.col("__pos")
-                ).alias("__cell"),
-                trunc_digits(-F.element_at(F.col("__keys"), F.col("__pos"))).alias("__ccos"),
-            )
-            .cache()
+        .select(
+            "__id", "__v", "__norm", F.col("cid").alias("__cell"),
+            trunc_digits(-F.col("key")).alias("__ccos"),
         )
-    else:
-        if cent_lists is not None:
-            centroids = df.sparkSession.createDataFrame(
-                list(zip(*cent_lists)), "cid int, cvec array<double>"
-            )
-        assigned = _two_level_assign(points, centroids).cache()
+        .cache()
+    )
     a = assigned.toDF("id_a", "v_a", "norm_a", "cell", "ccos_a")
     b = assigned.toDF("id_b", "v_b", "norm_b", "cell", "ccos_b")
     pair_cos = trunc_digits(
@@ -2074,33 +1938,22 @@ def bloom_ingest_gate(
 def save_bloom_ingest_filter(bloom: BloomIngestFilter, path: str, spark=None) -> None:
     """Persist the filter as a single JSON artifact (ints round-trip
     exactly), any Hadoop-FS URI — the ``save_pq_codebooks`` pattern."""
-    import json
+    from aws_data_wrangler_spark.s3._fs import _write_json_artifact
 
-    from aws_data_wrangler_spark.s3._fs import open_s3_object
-
-    with open_s3_object(path, "w", spark=spark) as f:
-        json.dump(
-            {
-                "format": "bloom_ingest_filter",
-                "words": list(bloom.words),
-                "num_bits": bloom.num_bits,
-                "num_hashes": bloom.num_hashes,
-                "num_items": bloom.num_items,
-                "fpp": bloom.fpp,
-            },
-            f,
-        )
+    payload = {
+        "words": list(bloom.words),
+        "num_bits": bloom.num_bits,
+        "num_hashes": bloom.num_hashes,
+        "num_items": bloom.num_items,
+        "fpp": bloom.fpp,
+    }
+    _write_json_artifact("bloom_ingest_filter", payload, path, spark=spark)
 
 
 def load_bloom_ingest_filter(path: str, spark=None) -> BloomIngestFilter:
-    import json
+    from aws_data_wrangler_spark.s3._fs import _read_json_artifact
 
-    from aws_data_wrangler_spark.s3._fs import open_s3_object
-
-    with open_s3_object(path, "r", spark=spark) as f:
-        d = json.load(f)
-    if d.get("format") != "bloom_ingest_filter":
-        raise ValueError(f"not a bloom_ingest_filter artifact: {path}")
+    d = _read_json_artifact("bloom_ingest_filter", path, spark=spark)
     if d["num_bits"] != 64 * len(d["words"]):
         raise ValueError(
             f"corrupt bloom artifact at {path}: num_bits={d['num_bits']} "
@@ -2170,23 +2023,13 @@ def save_minhash_corpus_state(
     ``minhash_corpus_state`` docstring promises: build once, persist,
     and every nightly batch reloads two parquet scans instead of
     re-mining corpus text."""
-    import json
-
-    from aws_data_wrangler_spark.s3._fs import open_s3_object
+    from aws_data_wrangler_spark.s3._fs import _write_json_artifact
 
     root = path.rstrip("/")
     state.shingles.write.mode("overwrite").parquet(f"{root}/shingles")
     state.band_rows.write.mode("overwrite").parquet(f"{root}/band_rows")
-    with open_s3_object(f"{root}/_minhash_meta.json", "w", spark=spark) as f:
-        json.dump(
-            {
-                "format": "minhash_corpus_state",
-                "n": state.n,
-                "num_hashes": state.num_hashes,
-                "bands": state.bands,
-            },
-            f,
-        )
+    meta = {"n": state.n, "num_hashes": state.num_hashes, "bands": state.bands}
+    _write_json_artifact("minhash_corpus_state", meta, f"{root}/_minhash_meta.json", spark=spark)
 
 
 def load_minhash_corpus_state(spark, path: str) -> MinHashCorpusState:
@@ -2195,15 +2038,10 @@ def load_minhash_corpus_state(spark, path: str) -> MinHashCorpusState:
     ``minhash_lsh_incremental(corpus_state=...)`` keeps rejecting
     mismatched batch parameters exactly as with a freshly built
     state."""
-    import json
-
-    from aws_data_wrangler_spark.s3._fs import open_s3_object
+    from aws_data_wrangler_spark.s3._fs import _read_json_artifact
 
     root = path.rstrip("/")
-    with open_s3_object(f"{root}/_minhash_meta.json", "r", spark=spark) as f:
-        meta = json.load(f)
-    if meta.get("format") != "minhash_corpus_state":
-        raise ValueError(f"not a minhash_corpus_state artifact: {path}")
+    meta = _read_json_artifact("minhash_corpus_state", f"{root}/_minhash_meta.json", spark=spark)
     return MinHashCorpusState(
         spark.read.parquet(f"{root}/shingles"),
         spark.read.parquet(f"{root}/band_rows"),

@@ -1079,12 +1079,16 @@ def kmv_sketches(
     column's (count, NDV), and one stacked (column, key) scan hashes
     and prunes all columns against their per-column thresholds — 2
     corpus passes for ANY column count instead of 2 per column, with
-    per-column results bit-identical to the single-column path.
+    per-column results identical to the single-column path up to the
+    8× prune-margin argument above. Column names must be distinct.
     """
     if k < 2:
         raise ValueError(f"k must be >= 2, got {k}")
     if not cols:
         raise ValueError("cols must be non-empty")
+    dupes = sorted({c for c in cols if cols.count(c) > 1})
+    if dupes:
+        raise ValueError(f"cols must be distinct, got duplicates {dupes}")
     batch = (
         _bcol(batch_col).cast("string") if batch_col else F.lit("__all__")
     ).alias("batch")
@@ -1167,10 +1171,12 @@ def kmv_sketches(
     # scan stacking (column, key) via explode, hashing once per cell,
     # and pruning against the per-(batch, column) threshold delivered
     # by ONE broadcast join. 2 scans total for ANY column count.
-    # Per-column results are BIT-IDENTICAL to the single-column path
-    # (same md5 coin per (column, key), same HLL NDV estimator per
-    # column, same threshold arithmetic, same exact k-min) — pinned in
-    # tests against the per-column loop and the hashlib reference.
+    # Per-column results are identical to the single-column path up
+    # to the 8× prune-margin argument (same md5 coin per (column, key),
+    # same HLL NDV estimator per column, same threshold arithmetic,
+    # same exact k-min: both equal the unpruned k-min unless that bound
+    # fails) — pinned in tests against the per-column loop and the
+    # hashlib reference.
     stats_wide = df.groupBy(batch).agg(
         *[
             agg

@@ -43,6 +43,10 @@ from aws_data_wrangler_spark.functions import trunc_digits
 DEFAULT_LLOYD_ITERATIONS = 5
 
 
+def _l2_norm(vec: "F.Column") -> "F.Column":
+    return F.sqrt(F.aggregate(F.transform(vec, lambda x: x * x), F.lit(0.0), lambda a, x: a + x))
+
+
 def _with_norm(
     df: DataFrame, id_col: str, vec_col: str, prefix: str, keep=()
 ) -> DataFrame:
@@ -50,20 +54,51 @@ def _with_norm(
     return df.select(
         F.col(id_col).alias(f"{prefix}_id"),
         vec.alias(f"{prefix}_vec"),
-        F.sqrt(
-            F.aggregate(F.transform(vec, lambda x: x * x), F.lit(0.0), lambda a, x: a + x)
-        ).alias(f"{prefix}_norm"),
+        _l2_norm(vec).alias(f"{prefix}_norm"),
         *[F.col(c) for c in keep],
     )
 
 
 def _cosine(a_vec: str, b_vec: str, a_norm: str, b_norm: str) -> "F.Column":
-    dot = F.aggregate(
-        F.zip_with(F.col(a_vec), F.col(b_vec), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
+    return _dot_expr(F.col(a_vec), F.col(b_vec)) / (F.col(a_norm) * F.col(b_norm))
+
+
+def _top_k(
+    scored: DataFrame, score: str, k: int, cols=None, ascending: bool = False
+) -> DataFrame:
+    """The rank tail every search tier shares: per query, ``rank`` =
+    row_number by (``score`` desc — asc with ``ascending`` —,
+    neighbor_id asc), rows with rank ≤ ``k``, projected to ``cols``
+    (default: query_id, neighbor_id, rank, score)."""
+    order = F.col(score).asc() if ascending else F.col(score).desc()
+    window = Window.partitionBy("query_id").orderBy(order, F.col("neighbor_id").asc())
+    return (
+        scored.withColumn("rank", F.row_number().over(window))
+        .filter(F.col("rank") <= k)
+        .select(*(cols or ("query_id", "neighbor_id", "rank", score)))
     )
-    return dot / (F.col(a_norm) * F.col(b_norm))
+
+
+def _rescore(
+    approx: DataFrame, n: int, vecs: DataFrame, queries: DataFrame, id_col: str, vec_col: str
+) -> DataFrame:
+    """Shortlist → exact rescore, shared by every quantized tier: each
+    query's ``n`` best ``approx_cosine`` candidates meet their
+    full-precision vectors (``vecs``: c_id, c_vec, c_norm) and the
+    broadcast query vectors, and score exact cosine —
+    (query_id, neighbor_id, cosine). Quantization error can cost recall
+    at the cut, never a wrong final score."""
+    shortlist = _top_k(approx, "approx_cosine", n, cols=("query_id", "neighbor_id"))
+    q = F.broadcast(_with_norm(queries, id_col, vec_col, "q"))
+    return (
+        shortlist.join(vecs, shortlist.neighbor_id == vecs.c_id)
+        .join(q, shortlist.query_id == F.col("q_id"))
+        .select(
+            "query_id",
+            "neighbor_id",
+            trunc_digits(_cosine("q_vec", "c_vec", "q_norm", "c_norm")).alias("cosine"),
+        )
+    )
 
 
 def cosine_topk(
@@ -91,14 +126,7 @@ def cosine_topk(
             trunc_digits(_cosine("q_vec", "c_vec", "q_norm", "c_norm")).alias("cosine"),
         )
     )
-    window = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(window))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
+    return _top_k(scored, "cosine", k)
 
 
 def metric_topk(
@@ -138,19 +166,9 @@ def metric_topk(
         F.col(vec_col).cast("array<double>").alias("c_vec"),
     )
     if metric == "l2":
-        score = F.aggregate(
-            F.zip_with(F.col("q_vec"), F.col("c_vec"), lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        order = [F.col("score").asc(), F.col("neighbor_id").asc()]
+        score = _l2_sq(F.col("q_vec"), F.col("c_vec"))
     else:
-        score = F.aggregate(
-            F.zip_with(F.col("q_vec"), F.col("c_vec"), lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        order = [F.col("score").desc(), F.col("neighbor_id").asc()]
+        score = _dot_expr(F.col("q_vec"), F.col("c_vec"))
     scored = (
         c.crossJoin(q)
         .filter(F.col("q_id") != F.col("c_id"))
@@ -165,12 +183,7 @@ def metric_topk(
         # vector would occupy rank 1 of EVERY l2 query's top-k
         .filter(F.col("score").isNotNull())
     )
-    window = Window.partitionBy("query_id").orderBy(*order)
-    return (
-        scored.withColumn("rank", F.row_number().over(window))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "score")
-    )
+    return _top_k(scored, "score", k, ascending=metric == "l2")
 
 
 def cosine_topk_arrow(
@@ -230,14 +243,7 @@ def cosine_topk_arrow(
                 )
 
     scored = corpus.select(id_col, vec_col).mapInPandas(kernel, out_schema)
-    window = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(window))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
+    return _top_k(scored, "cosine", k)
 
 
 # ---------------------------------------------------------------------------
@@ -278,8 +284,8 @@ def collect_centroids(
     sorted by cid so first-occurrence argmin ties resolve to the
     lowest cid (the documented tie-break). Guarded: past ``max_cells``
     a flat literal stops being a sane plan constant — assign via the
-    two-level coarse quantizer (``dedup.semdedup`` routes there
-    automatically) or pre-partition by cell."""
+    two-level coarse quantizer (``assign_cells`` and ``dedup.semdedup``
+    route there automatically) or pre-partition by cell."""
     rows = centroids.select("cid", "cvec").collect()
     if len(rows) > max_cells:
         raise ValueError(
@@ -307,6 +313,19 @@ def _dot_expr(vec_expr: "F.Column", cent: "F.Column") -> "F.Column":
     )
 
 
+def _argmin(keys: "F.Column") -> "F.Column":
+    """1-based position of the smallest key; ties → the first one."""
+    return F.array_position(keys, F.array_min(keys)).cast("int")
+
+
+def _cell_key(vec_expr: "F.Column", cent: "F.Column", metric: str, norm_expr) -> "F.Column":
+    """Ranking key of a vector against ONE centroid vector (ascending =
+    better): squared L2, or negated cosine for ``metric='cosine'``."""
+    if metric == "cosine":
+        return -(_dot_expr(vec_expr, cent) / (norm_expr * _l2_norm(cent)))
+    return _l2_sq(vec_expr, cent)
+
+
 def cell_key_array(
     vec_expr: "F.Column",
     cent_vecs: Sequence[Sequence[float]],
@@ -319,18 +338,7 @@ def cell_key_array(
     cosine bit-for-bit). One Literal + one ``transform`` — a pure
     projection regardless of cell count."""
     cents_lit = _nested_lit([[float(x) for x in v] for v in cent_vecs], "array<array<double>>")
-    if metric == "cosine":
-
-        def neg_cos(cv: "F.Column") -> "F.Column":
-            cnorm = F.sqrt(
-                F.aggregate(
-                    F.transform(cv, lambda x: x * x), F.lit(0.0), lambda a, x: a + x
-                )
-            )
-            return -(_dot_expr(vec_expr, cv) / (norm_expr * cnorm))
-
-        return F.transform(cents_lit, neg_cos)
-    return F.transform(cents_lit, lambda cv: _l2_sq(vec_expr, cv))
+    return F.transform(cents_lit, lambda cv: _cell_key(vec_expr, cv, metric, norm_expr))
 
 
 def probe_cells(
@@ -350,6 +358,67 @@ def probe_cells(
     return F.slice(ranked, 1, nprobe)
 
 
+# The largest flat centroid literal a plan ships, in doubles (≈ 32 MB);
+# past it — or past ``max_cells`` cells — assignment goes two-level.
+_FLAT_LITERAL_DOUBLES = 4_000_000
+
+
+def _flat_assign(
+    df: DataFrame,
+    keep,
+    cent_ids,
+    cent_vecs,
+    vec: "F.Column",
+    norm: Optional["F.Column"] = None,
+    metric: str = "l2",
+    key: bool = False,
+    residual: bool = False,
+) -> DataFrame:
+    """THE nearest-cell assignment (literal argmin, ties → lowest cid)
+    as one shuffle-free Project over ``df``: the ``keep`` columns, then
+    ``cid``, then — on request — the winning ``key`` and the
+    ``residual`` (vector − its centroid)."""
+    pos = F.col("__pos")
+    out = [F.element_at(_nested_lit(cent_ids, "array<int>"), pos).alias("cid")]
+    if key:
+        out.append(F.element_at(F.col("__keys"), pos).alias("key"))
+    if residual:
+        cents_lit = _nested_lit(cent_vecs, "array<array<double>>")
+        out.append(
+            F.zip_with(vec, F.element_at(cents_lit, pos), lambda x, y: x - y).alias("residual")
+        )
+    return (
+        df.withColumn("__keys", cell_key_array(vec, cent_vecs, metric=metric, norm_expr=norm))
+        .withColumn("__pos", _argmin(F.col("__keys")))
+        .select(*keep, *out)
+    )
+
+
+def _nearest_cells(
+    df: DataFrame,
+    keep,
+    vec: "F.Column",
+    norm: "F.Column",
+    metric: str,
+    centroids: Optional[DataFrame] = None,
+    cent_lists: Optional[tuple] = None,
+    max_cells: int = 100_000,
+) -> DataFrame:
+    """The one flat-vs-two-level routing rule (``assign_cells`` states
+    it): ``keep`` columns + (cid, key), from a centroid table or from
+    already-collected ``cent_lists``."""
+    if cent_lists is None and centroids.count() <= max_cells:  # artifact-sized
+        cent_lists = collect_centroids(centroids, max_cells=max_cells)
+    if cent_lists is not None:
+        ids, vecs = cent_lists
+        if len(ids) <= max_cells and len(ids) * len(vecs[0] if vecs else ()) <= _FLAT_LITERAL_DOUBLES:
+            return _flat_assign(df, keep, ids, vecs, vec, norm, metric, key=True)
+        centroids = df.sparkSession.createDataFrame(
+            list(zip(ids, vecs)), "cid int, cvec array<double>"
+        )
+    return _two_level_assign(df, keep, vec, norm, metric, centroids)
+
+
 def assign_cells(
     df: DataFrame,
     centroids: DataFrame,
@@ -364,67 +433,44 @@ def assign_cells(
     building block ``ivf_topk`` / ``ivfpq_topk`` / ``dedup.semdedup``
     share, exposed for pre-partitioning a corpus by cell.
 
-    Past ``max_cells`` (where a flat plan literal stops being sane) the
-    assignment automatically routes through a TWO-LEVEL coarse
-    quantizer: argmin over ~√k super-cells (a cid-ordered subsample,
-    still one literal projection), then a broadcast-hash equi-join on
-    the super-cell id delivers that super-cell's children array and the
+    Routing — the one rule, shared with ``dedup.semdedup``: the flat
+    literal argmin while the centroid table has at most ``max_cells``
+    cells AND at most 4M doubles (cells × dim, ≈ 32 MB of plan
+    constant); past either bound, a TWO-LEVEL coarse quantizer:
+    argmin over ~√k super-cells (a cid-ordered subsample, still one
+    literal projection), then a broadcast-hash equi-join on the
+    super-cell id delivers that super-cell's children array and the
     final argmin happens in-array — no n×k fan-out, no corpus-keyed
     shuffle at ANY k (standard IVF nprobe=1 assignment, so cell borders
     are approximate in that regime, exactly as FAISS coarse assignment
-    is)."""
-    n_cells = centroids.count()  # centroid tables are artifact-sized
-    if n_cells > max_cells:
-        return _two_level_assign(df, centroids, id_col, vec_col, metric)
-    cent_ids, cent_vecs = collect_centroids(centroids, max_cells=max_cells)
+    is). The search tiers never route: their nprobe probe needs the
+    flat literal, so they raise past ``max_cells``."""
     vec = F.col(vec_col).cast("array<double>")
-    norm = F.sqrt(
-        F.aggregate(F.transform(vec, lambda x: x * x), F.lit(0.0), lambda a, x: a + x)
+    return _nearest_cells(
+        df, [F.col(id_col)], vec, _l2_norm(vec), metric,
+        centroids=centroids, max_cells=max_cells,
     )
-    keys = cell_key_array(vec, cent_vecs, metric=metric, norm_expr=norm)
-    return (
-        df.select(F.col(id_col), keys.alias("__keys"))
-        .withColumn("__pos", F.array_position(F.col("__keys"), F.array_min(F.col("__keys"))).cast("int"))
-        .select(
-            F.col(id_col),
-            F.element_at(_nested_lit(cent_ids, "array<int>"), F.col("__pos")).alias("cid"),
-            F.element_at(F.col("__keys"), F.col("__pos")).alias("key"),
-        )
-    )
-
-
-def _child_key(vec_expr: "F.Column", child_vec: "F.Column", metric: str, norm_expr) -> "F.Column":
-    """Ranking key of a point against ONE child centroid vector (same
-    convention as ``cell_key_array``: ascending = better)."""
-    if metric == "cosine":
-        cnorm = F.sqrt(
-            F.aggregate(
-                F.transform(child_vec, lambda x: x * x), F.lit(0.0), lambda a, x: a + x
-            )
-        )
-        return -(_dot_expr(vec_expr, child_vec) / (norm_expr * cnorm))
-    return _l2_sq(vec_expr, child_vec)
 
 
 def _two_level_assign(
     df: DataFrame,
-    centroids: DataFrame,
-    id_col: str,
-    vec_col: str,
+    keep,
+    vec: "F.Column",
+    norm: "F.Column",
     metric: str,
+    centroids: DataFrame,
 ) -> DataFrame:
-    """``assign_cells`` for centroid tables too large for one plan
-    literal: the standard IVF two-level coarse quantizer, kept
-    corpus-shuffle-free end to end. Level 1 picks each point's nearest
-    of ~√k super-cells inside a Project (literal argmin); level 2
-    assigns every centroid to its super-cell the same way
-    (centroid-table-sized work), groups them into one cid-sorted
-    children array per super-cell, and a broadcast-hash equi-join on
-    the ≤√k-cardinality super-cell key hands each point exactly one
-    children array for the in-array final argmin. LEFT join: a
-    degenerate point (null vector / all-NaN keys → null super-cell)
-    keeps a row with null cid/key — the flat path's behavior — instead
-    of silently disappearing."""
+    """The two-level coarse quantizer behind ``_nearest_cells``, kept
+    corpus-shuffle-free end to end: ``keep`` columns + (cid, key).
+    Level 1 picks each point's nearest of ~√k super-cells inside a
+    Project (literal argmin); level 2 assigns every centroid to its
+    super-cell the same way (centroid-table-sized work), groups them
+    into one cid-sorted children array per super-cell, and a
+    broadcast-hash equi-join on the ≤√k-cardinality super-cell key
+    hands each point exactly one children array for the in-array final
+    argmin. LEFT join: a degenerate point (null vector / all-NaN keys →
+    null super-cell) keeps a row with null cid/key — the flat path's
+    behavior — instead of silently disappearing."""
     cents = centroids.select(
         F.col("cid").cast("int").alias("cid"),
         F.col("cvec").cast("array<double>").alias("cvec"),
@@ -433,16 +479,12 @@ def _two_level_assign(
     n_super = max(1, min(1024, int(n_cells ** 0.5) + 1))
     sup_rows = cents.orderBy("cid").limit(n_super).collect()
     sup_vecs = [[float(x) for x in r["cvec"]] for r in sup_rows]
-    cnorm = F.sqrt(
-        F.aggregate(
-            F.transform(F.col("cvec"), lambda x: x * x), F.lit(0.0), lambda a, x: a + x
-        )
-    )
-    ckeys = cell_key_array(F.col("cvec"), sup_vecs, metric=metric, norm_expr=cnorm)
+
+    def super_cell(v: "F.Column", n: "F.Column") -> "F.Column":
+        return _argmin(cell_key_array(v, sup_vecs, metric=metric, norm_expr=n))
+
     children = (
-        cents.withColumn(
-            "__scell", F.array_position(ckeys, F.array_min(ckeys)).cast("int")
-        )
+        cents.withColumn("__scell", super_cell(F.col("cvec"), _l2_norm(F.col("cvec"))))
         .groupBy("__scell")
         .agg(
             F.array_sort(
@@ -450,32 +492,21 @@ def _two_level_assign(
             ).alias("__children")
         )
     )
-    vec = F.col(vec_col).cast("array<double>")
-    norm = F.sqrt(
-        F.aggregate(F.transform(vec, lambda x: x * x), F.lit(0.0), lambda a, x: a + x)
-    )
-    points = df.select(F.col(id_col), vec.alias("__v"), norm.alias("__norm"))
-    pkeys = cell_key_array(
-        F.col("__v"), sup_vecs, metric=metric, norm_expr=F.col("__norm")
-    )
     return (
-        points.withColumn(
-            "__scell", F.array_position(pkeys, F.array_min(pkeys)).cast("int")
-        )
+        df.withColumn("__tv", vec)
+        .withColumn("__tn", norm)
+        .withColumn("__scell", super_cell(F.col("__tv"), F.col("__tn")))
         .join(F.broadcast(children), "__scell", "left")
         .withColumn(
             "__ckeys",
             F.transform(
                 F.col("__children"),
-                lambda ch: _child_key(F.col("__v"), ch["cvec"], metric, F.col("__norm")),
+                lambda ch: _cell_key(F.col("__tv"), ch["cvec"], metric, F.col("__tn")),
             ),
         )
-        .withColumn(
-            "__cpos",
-            F.array_position(F.col("__ckeys"), F.array_min(F.col("__ckeys"))).cast("int"),
-        )
+        .withColumn("__cpos", _argmin(F.col("__ckeys")))
         .select(
-            F.col(id_col),
+            *keep,
             F.element_at(F.col("__children"), F.col("__cpos"))["cid"].alias("cid"),
             F.element_at(F.col("__ckeys"), F.col("__cpos")).alias("key"),
         )
@@ -551,12 +582,7 @@ def lsh_topk(
         F.col("c_id").alias("neighbor_id"),
         trunc_digits(_cosine("q_vec", "c_vec", "q_norm", "c_norm")).alias("cosine"),
     )
-    window = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(window))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
+    return _top_k(scored, "cosine", k)
 
 
 def quantize_embeddings(
@@ -637,33 +663,9 @@ def sq8_topk(
             (dot / (F.col("q_norm") * F.col("c_norm"))).alias("approx_cosine"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("approx_cosine").desc(), F.col("neighbor_id").asc()
-    )
-    shortlist = (
-        approx.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k * rescore_factor)
-        .select("query_id", "neighbor_id")
-    )
     # exact rescore: full-precision vectors for the shortlist only
     cv = _with_norm(corpus, id_col, vec_col, "c")
-    rescored = (
-        shortlist.join(cv, shortlist.neighbor_id == cv.c_id)
-        .join(q, shortlist.query_id == F.col("q_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            trunc_digits(_cosine("q_vec", "c_vec", "q_norm", "c_norm")).alias("cosine"),
-        )
-    )
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        rescored.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
+    return _top_k(_rescore(approx, k * rescore_factor, cv, queries, id_col, vec_col), "cosine", k)
 
 
 def train_pq_codebooks(
@@ -733,6 +735,27 @@ def _books_lit(codebooks: List[List[List[float]]]) -> "F.Column":
     )
 
 
+def _luts(codebooks: List[List[List[float]]]) -> "F.Column":
+    """Per-query ADC lookup tables over ``q_vec``: subvector·centroid
+    dot products, ``m × num_codes``, as ONE nested-array column."""
+    sub = len(codebooks[0][0])
+    return F.transform(
+        _books_lit(codebooks),
+        lambda book, s: F.transform(
+            book, lambda cent: _dot_expr(F.slice(F.col("q_vec"), s * sub + 1, sub), cent)
+        ),
+    )
+
+
+def _adc() -> "F.Column":
+    """The ADC dot product: ``m`` LUT lookups of ``codes`` in ``luts``."""
+    return F.aggregate(
+        F.zip_with(F.col("codes"), F.col("luts"), lambda cd, lut: F.element_at(lut, cd + 1)),
+        F.lit(0.0),
+        lambda a, x: a + x,
+    )
+
+
 def pq_encode(
     corpus: DataFrame,
     codebooks: List[List[List[float]]],
@@ -765,7 +788,7 @@ def pq_encode(
     def code_for(book: "F.Column", s: "F.Column") -> "F.Column":
         subvec = F.slice(vec, s * sub + 1, sub)
         dists = F.transform(book, lambda cent: _l2_sq(subvec, cent))
-        return (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
+        return _argmin(dists) - 1
 
     codes = F.transform(_books_lit(codebooks), code_for)
     keep = [F.col(c) for c in keep_cols]
@@ -812,24 +835,12 @@ def pq_topk(
         codebooks = train_pq_codebooks(
             corpus, m=m, num_codes=num_codes, id_col=id_col, vec_col=vec_col
         )
-    sub = len(codebooks[0][0])
     if encoded is None:
         encoded = pq_encode(corpus, codebooks, id_col, vec_col)
-    luts = F.transform(
-        _books_lit(codebooks),
-        lambda book, s: F.transform(
-            book, lambda cent: _dot_expr(F.slice(F.col("q_vec"), s * sub + 1, sub), cent)
-        ),
-    )
     q = F.broadcast(
         _with_norm(queries, id_col, vec_col, "q").select(
-            "q_id", "q_norm", "q_vec", luts.alias("luts")
+            "q_id", "q_norm", "q_vec", _luts(codebooks).alias("luts")
         )
-    )
-    approx_dot = F.aggregate(
-        F.zip_with(F.col("codes"), F.col("luts"), lambda c, lut: F.element_at(lut, c + 1)),
-        F.lit(0.0),
-        lambda a, x: a + x,
     )
     c = encoded.select(
         F.col(id_col).alias("c_id"), F.col("codes"), F.col("approx_norm")
@@ -840,36 +851,11 @@ def pq_topk(
         .select(
             F.col("q_id").alias("query_id"),
             F.col("c_id").alias("neighbor_id"),
-            (approx_dot / (F.col("q_norm") * F.col("approx_norm"))).alias("approx_cosine"),
+            (_adc() / (F.col("q_norm") * F.col("approx_norm"))).alias("approx_cosine"),
         )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("approx_cosine").desc(), F.col("neighbor_id").asc()
-    )
-    shortlist = (
-        approx.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k * rescore_factor)
-        .select("query_id", "neighbor_id")
     )
     cv = _with_norm(corpus, id_col, vec_col, "c")
-    q_plain = F.broadcast(_with_norm(queries, id_col, vec_col, "q"))
-    rescored = (
-        shortlist.join(cv, shortlist.neighbor_id == cv.c_id)
-        .join(q_plain, shortlist.query_id == F.col("q_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            trunc_digits(_cosine("q_vec", "c_vec", "q_norm", "c_norm")).alias("cosine"),
-        )
-    )
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        rescored.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
+    return _top_k(_rescore(approx, k * rescore_factor, cv, queries, id_col, vec_col), "cosine", k)
 
 
 def ivfpq_topk(
@@ -923,23 +909,7 @@ def ivfpq_topk(
         # max_cells explicitly, or pre-partition via assign_cells
         # (two-level) + build_partitioned_ivf instead
         cent_ids, cent_vecs = collect_centroids(centroids, max_cells=max_cells)
-    cents_lit = _nested_lit(cent_vecs, "array<array<double>>")
-    c = _with_norm(corpus, id_col, vec_col, "c")
-    # zero-shuffle assignment: L2 key array + argmin in one Project,
-    # carrying the residual + exact norm (ties → lowest cid)
-    keys_c = cell_key_array(F.col("c_vec"), cent_vecs)
-    assigned = (
-        c.withColumn("__keys", keys_c)
-        .withColumn("__pos", F.array_position(F.col("__keys"), F.array_min(F.col("__keys"))).cast("int"))
-        .select(
-            "c_id",
-            "c_norm",
-            F.element_at(_nested_lit(cent_ids, "array<int>"), F.col("__pos")).alias("cid"),
-            F.zip_with(
-                F.col("c_vec"), F.element_at(cents_lit, F.col("__pos")), lambda x, y: x - y
-            ).alias("residual"),
-        )
-    )
+    assigned = _ivfpq_assigned(corpus, cent_ids, cent_vecs, id_col, vec_col)
     if codebooks is None:
         residuals = assigned.select(F.col("c_id").alias(id_col), F.col("residual").alias(vec_col))
         # cache: each of the m Lloyd loops actions this plan several
@@ -953,79 +923,89 @@ def ivfpq_topk(
         # table has no further consumer; release executor storage so
         # repeated calls in a long-lived session don't accumulate it
         residuals.unpersist()
-    sub = len(codebooks[0][0])
     # encode in the SAME projection chain that assigned: c_norm and
     # cid ride along, so no join (and no second pass) re-derives the
     # assignment for downstream consumers
-    encoded = pq_encode(
-        assigned, codebooks, id_col="c_id", vec_col="residual",
-        keep_cols=["c_norm", "cid"],
-    ).select("c_id", "c_norm", "cid", "codes")
-    # probe: top-nprobe cells per query by L2 (array-sort projection),
-    # carrying q·centroid and the ADC LUTs as one nested-array column
+    rows = _ivfpq_encode_layout(assigned, codebooks, id_col, vec_col)
+    q_cells = _probe(queries, id_col, vec_col, cent_ids, cent_vecs, nprobe, codebooks=codebooks)
+    approx = _ivfpq_approx(rows, q_cells, id_col)
+    cv = _with_norm(corpus, id_col, vec_col, "c")
+    return _top_k(_rescore(approx, k * rescore_factor, cv, queries, id_col, vec_col), "cosine", k)
+
+
+def _probe(
+    queries: DataFrame,
+    id_col: str,
+    vec_col: str,
+    cent_ids,
+    cent_vecs,
+    nprobe: int,
+    metric: str = "l2",
+    codebooks: Optional[List[List[List[float]]]] = None,
+) -> DataFrame:
+    """The query probe every IVF tier shares: each query's ``nprobe``
+    best cells (``probe_cells`` over the centroid literal), exploded to
+    one (q_id, q_vec, q_norm, cid) row per probed cell. The
+    PQ tiers pass ``codebooks``: each row then also carries
+    ``q_dot_cent`` (q·centroid) and the ADC ``luts``."""
     q = _with_norm(queries, id_col, vec_col, "q")
-    luts = F.transform(
-        _books_lit(codebooks),
-        lambda book, s: F.transform(
-            book, lambda cent: _dot_expr(F.slice(F.col("q_vec"), s * sub + 1, sub), cent)
-        ),
+    keys = cell_key_array(F.col("q_vec"), cent_vecs, metric=metric, norm_expr=F.col("q_norm"))
+    pos = F.col("__pc.p")
+    extra = []
+    if codebooks is not None:
+        cents_lit = _nested_lit(cent_vecs, "array<array<double>>")
+        extra = [
+            _dot_expr(F.col("q_vec"), F.element_at(cents_lit, pos)).alias("q_dot_cent"),
+            _luts(codebooks).alias("luts"),
+        ]
+    return q.select(
+        "q_id", "q_vec", "q_norm",
+        F.explode(probe_cells(keys, len(cent_ids), nprobe)).alias("__pc"),
+    ).select(
+        "q_id", "q_vec", "q_norm",
+        F.element_at(_nested_lit(cent_ids, "array<int>"), pos).alias("cid"),
+        *extra,
     )
-    keys_q = cell_key_array(F.col("q_vec"), cent_vecs)
-    probed = probe_cells(keys_q, len(cent_ids), nprobe)
-    q_cells = F.broadcast(
-        q.select("q_id", "q_norm", "q_vec", F.explode(probed).alias("__pc"))
-        .select(
-            "q_id",
-            "q_norm",
-            F.element_at(_nested_lit(cent_ids, "array<int>"), F.col("__pc.p")).alias("cid"),
-            _dot_expr(F.col("q_vec"), F.element_at(cents_lit, F.col("__pc.p"))).alias(
-                "q_dot_cent"
-            ),
-            luts.alias("luts"),
+
+
+def _ivf_scored(rows: DataFrame, q_cells: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """Exact-cosine scoring of IVF index-layout rows against the probe.
+    A query probing several cells can meet a neighbor once per cell:
+    deduplicated before ranking."""
+    return (
+        rows.select(
+            "cid",
+            F.col(id_col).alias("c_id"),
+            F.col(vec_col).alias("c_vec"),
+            F.col("vnorm").alias("c_norm"),
         )
+        .join(F.broadcast(q_cells), "cid")
+        .filter(F.col("q_id") != F.col("c_id"))
+        .select(
+            F.col("q_id").alias("query_id"),
+            F.col("c_id").alias("neighbor_id"),
+            trunc_digits(_cosine("q_vec", "c_vec", "q_norm", "c_norm")).alias("cosine"),
+        )
+        .dropDuplicates(["query_id", "neighbor_id"])
     )
-    adc = F.aggregate(
-        F.zip_with(F.col("codes"), F.col("luts"), lambda cd, lut: F.element_at(lut, cd + 1)),
-        F.lit(0.0),
-        lambda a, x: a + x,
-    )
-    approx = (
-        encoded.join(q_cells, "cid")
+
+
+def _ivfpq_approx(rows: DataFrame, q_cells: DataFrame, id_col: str) -> DataFrame:
+    """ADC candidate scoring of IVF+PQ index-layout rows against the
+    probe: residual ADC plus the precomputed q·centroid term over the
+    EXACT corpus norm, so ADC error lives only in the dot product —
+    (query_id, neighbor_id, approx_cosine)."""
+    return (
+        rows.select("cid", F.col(id_col).alias("c_id"), F.col("vnorm").alias("c_norm"), "codes")
+        .join(F.broadcast(q_cells), "cid")
         .filter((F.col("q_id") != F.col("c_id")) & (F.col("c_norm") > 0))
         .select(
             F.col("q_id").alias("query_id"),
             F.col("c_id").alias("neighbor_id"),
-            ((F.col("q_dot_cent") + adc) / (F.col("q_norm") * F.col("c_norm"))).alias(
+            ((F.col("q_dot_cent") + _adc()) / (F.col("q_norm") * F.col("c_norm"))).alias(
                 "approx_cosine"
             ),
         )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("approx_cosine").desc(), F.col("neighbor_id").asc()
-    )
-    shortlist = (
-        approx.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k * rescore_factor)
-        .select("query_id", "neighbor_id")
-    )
-    cv = _with_norm(corpus, id_col, vec_col, "c")
-    q_plain = F.broadcast(_with_norm(queries, id_col, vec_col, "q"))
-    rescored = (
-        shortlist.join(cv, shortlist.neighbor_id == cv.c_id)
-        .join(q_plain, shortlist.query_id == F.col("q_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            trunc_digits(_cosine("q_vec", "c_vec", "q_norm", "c_norm")).alias("cosine"),
-        )
-    )
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        rescored.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
     )
 
 
@@ -1094,13 +1074,10 @@ def _lloyd(
     one groupBy mean (one driver job; the collected means become the
     next round's literal). Empty cells drop out (FAISS behavior)."""
     for _ in range(iterations):
-        keys = cell_key_array(F.col("pvec"), cent_vecs)
-        pos = F.array_position(keys, F.array_min(keys)).cast("int")
-        cid = F.element_at(_nested_lit(cent_ids, "array<int>"), pos)
         # new centroid = per-cell mean, dimension-wise (one groupBy,
         # map-side partials; centroid table stays tiny)
         updated = (
-            points.select(cid.alias("cid"), "pvec")
+            _flat_assign(points, ["pvec"], cent_ids, cent_vecs, F.col("pvec"))
             .groupBy("cid")
             .agg(
                 F.array(
@@ -1159,42 +1136,11 @@ def ivf_topk(
         # past the flat-literal bound, raise max_cells explicitly or
         # use assign_cells (two-level) + build_partitioned_ivf
         cent_ids, cent_vecs = collect_centroids(centroids, max_cells=max_cells)
-    c = _with_norm(corpus, id_col, vec_col, "c")
-    q = _with_norm(queries, id_col, vec_col, "q")
-    keys_c = cell_key_array(F.col("c_vec"), cent_vecs, metric=metric, norm_expr=F.col("c_norm"))
-    c_cells = (
-        c.withColumn("__keys", keys_c)
-        .withColumn("__pos", F.array_position(F.col("__keys"), F.array_min(F.col("__keys"))).cast("int"))
-        .select(
-            "c_id", "c_vec", "c_norm",
-            F.element_at(_nested_lit(cent_ids, "array<int>"), F.col("__pos")).alias("cid"),
-        )
+    rows = ivf_index_rows(
+        corpus, cent_ids, cent_vecs, id_col=id_col, vec_col=vec_col, metric=metric
     )
-    keys_q = cell_key_array(F.col("q_vec"), cent_vecs, metric=metric, norm_expr=F.col("q_norm"))
-    probed = probe_cells(keys_q, len(cent_ids), nprobe)
-    q_cells = (
-        q.select("q_id", "q_vec", "q_norm", F.explode(probed).alias("__pc"))
-        .select(
-            "q_id", "q_vec", "q_norm",
-            F.element_at(_nested_lit(cent_ids, "array<int>"), F.col("__pc.p")).alias("cid"),
-        )
-    )
-    scored = (
-        c_cells.join(F.broadcast(q_cells), "cid")
-        .filter(F.col("q_id") != F.col("c_id"))
-        .select(
-            F.col("q_id").alias("query_id"),
-            F.col("c_id").alias("neighbor_id"),
-            trunc_digits(_cosine("q_vec", "c_vec", "q_norm", "c_norm")).alias("cosine"),
-        )
-        .dropDuplicates(["query_id", "neighbor_id"])
-    )
-    window = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(window))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
+    q_cells = _probe(queries, id_col, vec_col, cent_ids, cent_vecs, nprobe, metric=metric)
+    return _top_k(_ivf_scored(rows, q_cells, id_col, vec_col), "cosine", k)
 
 
 def build_partitioned_ivf(
@@ -1234,17 +1180,12 @@ def build_partitioned_ivf(
     dataset semantics (partition_cols) with the IVF assignment tier —
     the reference itself has no ANN analog.
     """
-    from aws_data_wrangler_spark import s3
-
     cent_ids, cent_vecs = collect_centroids(centroids, max_cells=max_cells)
     assigned = ivf_index_rows(
         corpus, cent_ids, cent_vecs, id_col=id_col, vec_col=vec_col,
         metric=metric, metadata_cols=metadata_cols,
     )
-    clustered = cluster_by_cell(assigned, id_col, files_per_cell)
-    s3.to_parquet(
-        clustered, path, dataset=True, partition_cols=["cid"], mode="overwrite", spark=spark
-    )
+    _write_index(assigned, path, id_col, files_per_cell, None, spark)
 
 
 def cluster_by_cell(df: DataFrame, id_col: str, files_per_cell: int) -> DataFrame:
@@ -1260,6 +1201,29 @@ def cluster_by_cell(df: DataFrame, id_col: str, files_per_cell: int) -> DataFram
     return df.repartition(
         F.col("cid"), F.pmod(F.hash(F.col(id_col)), F.lit(files_per_cell))
     )
+
+
+def _codebooks_path(index_path: str) -> str:
+    return f"{index_path.rstrip('/')}/_codebooks.json"
+
+
+def _write_index(
+    rows: DataFrame, path: str, id_col: str, files_per_cell: int, codebooks, spark
+) -> None:
+    """The one partitioned-index writer (builds, compaction, rebalance):
+    cluster by cell, overwrite ``path`` as a ``partitionBy(cid)``
+    dataset, then — for IVF+PQ — the ``_codebooks.json`` sidecar that
+    makes the index self-describing (written AFTER the dataset so the
+    overwrite can't eat it; the leading underscore keeps it invisible
+    to the parquet reader, the _SUCCESS convention)."""
+    from aws_data_wrangler_spark import s3
+
+    s3.to_parquet(
+        cluster_by_cell(rows, id_col, files_per_cell), path, dataset=True,
+        partition_cols=["cid"], mode="overwrite", spark=spark,
+    )
+    if codebooks is not None:
+        save_pq_codebooks(codebooks, _codebooks_path(path), spark=spark)
 
 
 def _check_metadata_cols(metadata_cols, reserved) -> None:
@@ -1296,22 +1260,14 @@ def ivf_index_rows(
     the streaming ingest sink (``streaming.index_ingest_sink``) so
     both write byte-compatible rows."""
     _check_metadata_cols(metadata_cols, {id_col, vec_col, "vnorm", "cid"})
-    meta = [F.col(c) for c in metadata_cols]
     c = _with_norm(corpus, id_col, vec_col, "c", keep=list(metadata_cols))
-    keys = cell_key_array(F.col("c_vec"), cent_vecs, metric=metric, norm_expr=F.col("c_norm"))
-    return (
-        c.withColumn("__keys", keys)
-        .withColumn(
-            "__pos", F.array_position(F.col("__keys"), F.array_min(F.col("__keys"))).cast("int")
-        )
-        .select(
-            F.col("c_id").alias(id_col),
-            F.col("c_vec").alias(vec_col),
-            F.col("c_norm").alias("vnorm"),
-            *meta,
-            F.element_at(_nested_lit(cent_ids, "array<int>"), F.col("__pos")).alias("cid"),
-        )
-    )
+    keep = [
+        F.col("c_id").alias(id_col),
+        F.col("c_vec").alias(vec_col),
+        F.col("c_norm").alias("vnorm"),
+        *metadata_cols,
+    ]
+    return _flat_assign(c, keep, cent_ids, cent_vecs, F.col("c_vec"), F.col("c_norm"), metric)
 
 
 def ivf_partitioned_topk(
@@ -1342,64 +1298,43 @@ def ivf_partitioned_topk(
     restricted; ranks are dense within the filtered pool (top-k AMONG
     matching neighbors, the FAISS IDSelector / vector-DB contract).
 
-    The probe set is computed exactly as ``ivf_topk`` computes it (the
-    same literal key arithmetic, so tie-breaks agree bit-for-bit), then
-    collected driver-side — queries × nprobe cell ids, artifact-sized —
-    to become scan-time pruning literals. Scoring joins the pruned
-    cells against the broadcast probe table on ``cid`` and rescores
-    with exact cosine using the stored norms; a query probing multiple
-    cells can meet a neighbor once per cell, deduplicated before
-    ranking (the ``ivf_topk`` contract).
+    The probe and the scoring are ``ivf_topk``'s own (so tie-breaks
+    agree bit-for-bit); only the index rows differ — the pruned parquet
+    scan with the stored norms instead of rows assigned in memory. The
+    probed cell ids (queries × nprobe, artifact-sized) are collected to
+    become scan-time pruning literals.
     """
+    cent_ids, cent_vecs = collect_centroids(centroids, max_cells=max_cells)
+    q_cells = _probe(queries, id_col, vec_col, cent_ids, cent_vecs, nprobe, metric=metric)
+    rows = _live_rows(spark, index_path, _probed_cids(q_cells), id_col, where)
+    return _top_k(_ivf_scored(rows, q_cells, id_col, vec_col), "cosine", k)
+
+
+def _probed_cids(q_cells: DataFrame) -> List[int]:
+    """The probed cell ids, collected to become scan-pruning literals:
+    queries × nprobe values, artifact-sized by contract (the query set
+    is the small, broadcast side of every ANN tier)."""
+    return sorted(r["cid"] for r in q_cells.select("cid").distinct().collect())
+
+
+def _cells_scan(spark, index_path: str, cids: List[int]) -> DataFrame:
+    """The index dataset partition-pruned to ``cids`` (PartitionFilters
+    ``cid IN (...)`` on the scan)."""
     from aws_data_wrangler_spark import s3
 
-    cent_ids, cent_vecs = collect_centroids(centroids, max_cells=max_cells)
-    cents_lit = _nested_lit(cent_vecs, "array<array<double>>")
-    q = _with_norm(queries, id_col, vec_col, "q")
-    keys_q = cell_key_array(F.col("q_vec"), cent_vecs, metric=metric, norm_expr=F.col("q_norm"))
-    probed = probe_cells(keys_q, len(cent_ids), nprobe)
-    q_cells = q.select("q_id", "q_vec", "q_norm", F.explode(probed).alias("__pc")).select(
-        "q_id", "q_vec", "q_norm",
-        F.element_at(_nested_lit(cent_ids, "array<int>"), F.col("__pc.p")).alias("cid"),
+    return s3.read_parquet(index_path, dataset=True, spark=spark).filter(
+        F.col("cid").isin(cids)
     )
-    # the probed cell ids become scan-pruning literals: queries×nprobe
-    # values, artifact-sized by contract (the query set is the small,
-    # broadcast side of every ANN tier)
-    probed_cids = sorted(
-        r["cid"] for r in q_cells.select("cid").distinct().collect()
-    )
-    corpus = s3.read_parquet(index_path, dataset=True, spark=spark).filter(
-        F.col("cid").isin(probed_cids)
-    )
+
+
+def _live_rows(spark, index_path: str, cids: List[int], id_col: str, where=None) -> DataFrame:
+    """The searchable rows of the probed cells: the pruned scan, the
+    metadata filter (``where`` lands on the scan, so simple predicates
+    reach parquet as PushedFilters), then the tombstone anti-join."""
+    rows = _cells_scan(spark, index_path, cids)
     if where is not None:
-        corpus = corpus.filter(where)
-    corpus = _apply_tombstones(
-        corpus, load_tombstones(spark, index_path, id_col), id_col
-    )
-    c = corpus.select(
-        F.col("cid"),
-        F.col(id_col).alias("c_id"),
-        F.col(vec_col).alias("c_vec"),
-        F.col("vnorm").alias("c_norm"),
-    )
-    scored = (
-        c.join(F.broadcast(q_cells), "cid")
-        .filter(F.col("q_id") != F.col("c_id"))
-        .select(
-            F.col("q_id").alias("query_id"),
-            F.col("c_id").alias("neighbor_id"),
-            trunc_digits(_cosine("q_vec", "c_vec", "q_norm", "c_norm")).alias("cosine"),
-        )
-        .dropDuplicates(["query_id", "neighbor_id"])
-    )
-    window = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(window))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
+        rows = rows.filter(where)
+    return _apply_tombstones(rows, load_tombstones(spark, index_path, id_col), id_col)
 
 
 def build_partitioned_ivfpq(
@@ -1435,8 +1370,6 @@ def build_partitioned_ivfpq(
     ``files_per_cell × num_cells`` — the build_partitioned_ivf
     discipline).
     """
-    from aws_data_wrangler_spark import s3
-
     _check_metadata_cols(
         metadata_cols, {id_col, vec_col, "vnorm", "cid", "codes"}
     )
@@ -1460,15 +1393,9 @@ def build_partitioned_ivfpq(
             id_col=id_col, vec_col=vec_col,
         )
     encoded = _ivfpq_encode_layout(assigned, codebooks, id_col, vec_col, metadata_cols)
-    clustered = cluster_by_cell(encoded, id_col, files_per_cell)
-    s3.to_parquet(
-        clustered, path, dataset=True, partition_cols=["cid"], mode="overwrite", spark=spark
-    )
-    # sidecar makes the index self-describing: a search session needs
-    # only the path (written AFTER the dataset so overwrite can't eat
-    # it; the leading underscore keeps it invisible to the parquet
-    # reader, the _SUCCESS convention)
-    save_pq_codebooks(codebooks, f"{path.rstrip('/')}/_codebooks.json", spark=spark)
+    # the sidecar makes the index self-describing: a search session
+    # needs only the path
+    _write_index(encoded, path, id_col, files_per_cell, codebooks, spark)
     if cached:
         assigned.unpersist()
     return codebooks
@@ -1482,25 +1409,9 @@ def _ivfpq_assigned(
     (c_id, c_vec, c_norm, cid, residual) plus any ``metadata_cols``
     carried verbatim — the shared first stage of IVF+PQ index builds
     and streaming ingest."""
-    cents_lit = _nested_lit(cent_vecs, "array<array<double>>")
     c = _with_norm(corpus, id_col, vec_col, "c", keep=list(metadata_cols))
-    keys_c = cell_key_array(F.col("c_vec"), cent_vecs)
-    return (
-        c.withColumn("__keys", keys_c)
-        .withColumn(
-            "__pos", F.array_position(F.col("__keys"), F.array_min(F.col("__keys"))).cast("int")
-        )
-        .select(
-            "c_id",
-            "c_vec",
-            "c_norm",
-            *[F.col(mc) for mc in metadata_cols],
-            F.element_at(_nested_lit(cent_ids, "array<int>"), F.col("__pos")).alias("cid"),
-            F.zip_with(
-                F.col("c_vec"), F.element_at(cents_lit, F.col("__pos")), lambda x, y: x - y
-            ).alias("residual"),
-        )
-    )
+    keep = ["c_id", "c_vec", "c_norm", *metadata_cols]
+    return _flat_assign(c, keep, cent_ids, cent_vecs, F.col("c_vec"), residual=True)
 
 
 def ivfpq_index_rows(
@@ -1566,31 +1477,29 @@ def compact_partitioned_index(
     copy and the tombstone sidecar is NOT carried over — compaction is
     where deletes stop costing an anti-join per search.
     """
+    rows, books = _index_rows_and_codebooks(spark, index_path, id_col)
+    _write_index(rows, target_path, id_col, files_per_cell, books, spark)
+
+
+def _index_rows_and_codebooks(spark, index_path: str, id_col: str) -> tuple:
+    """An index's live rows (tombstones applied physically) and its
+    codebooks — ``None`` for plain IVF. Layout detection follows the
+    SIDECAR, not a column name, and only a genuinely ABSENT sidecar
+    means plain IVF: a present-but-corrupt one fails loudly here, or a
+    repointed index would silently lose its codebooks and the first
+    codebooks=None search would break much later."""
     from aws_data_wrangler_spark import s3
+    from aws_data_wrangler_spark.s3._fs import does_object_exist
 
     rows = _apply_tombstones(
         s3.read_parquet(index_path, dataset=True, spark=spark),
         load_tombstones(spark, index_path, id_col),
         id_col,
     )
-    clustered = cluster_by_cell(rows, id_col, files_per_cell)
-    s3.to_parquet(
-        clustered, target_path, dataset=True, partition_cols=["cid"],
-        mode="overwrite", spark=spark,
-    )
-    # only a genuinely ABSENT sidecar means "plain IVF, nothing to
-    # carry" — a present-but-unreadable/corrupt sidecar must fail the
-    # compaction loudly, or the repointed index silently loses its
-    # codebooks and the first codebooks=None search breaks much later
-    from aws_data_wrangler_spark.s3._fs import does_object_exist
-
-    sidecar = f"{index_path.rstrip('/')}/_codebooks.json"
+    sidecar = _codebooks_path(index_path)
     if not does_object_exist(sidecar, spark=spark):
-        return
-    books = load_pq_codebooks(sidecar, spark=spark)
-    save_pq_codebooks(
-        books, f"{target_path.rstrip('/')}/_codebooks.json", spark=spark
-    )
+        return rows, None
+    return rows, load_pq_codebooks(sidecar, spark=spark)
 
 
 def rebalance_partitioned_index(
@@ -1630,24 +1539,14 @@ def rebalance_partitioned_index(
     Spark job; composes ``ivf[pq]_index_rows`` + ``cluster_by_cell``
     so rebalanced rows are byte-compatible with fresh builds.
     """
-    from aws_data_wrangler_spark import s3
-    from aws_data_wrangler_spark.s3._fs import does_object_exist
-
-    rows = _apply_tombstones(
-        s3.read_parquet(index_path, dataset=True, spark=spark),
-        load_tombstones(spark, index_path, id_col),
-        id_col,
-    )
-    # layout detection follows the SIDECAR, not the column name: only a
-    # genuine IVF+PQ index reserves "codes" — a plain-IVF index may
-    # legally carry a metadata column called "codes" and must keep it
-    sidecar = f"{index_path.rstrip('/')}/_codebooks.json"
-    is_pq = does_object_exist(sidecar, spark=spark)
-    layout = {id_col, vec_col, "vnorm", "cid"} | ({"codes"} if is_pq else set())
+    rows, books = _index_rows_and_codebooks(spark, index_path, id_col)
+    # only a genuine IVF+PQ index reserves "codes" — a plain-IVF index
+    # may legally carry a metadata column called "codes" and keeps it
+    layout = {id_col, vec_col, "vnorm", "cid"} | ({"codes"} if books else set())
     metadata_cols = [c for c in rows.columns if c not in layout]
     corpus = rows.select(id_col, vec_col, *metadata_cols)
     cent_ids, cent_vecs = collect_centroids(centroids, max_cells=max_cells)
-    if is_pq:
+    if books is not None:
         if metric != "l2":
             raise ValueError(
                 "the IVF+PQ layout assigns cells with the l2 key (the "
@@ -1655,26 +1554,16 @@ def rebalance_partitioned_index(
                 f"with metric={metric!r} would cluster differently than "
                 "every search expects; pass metric='l2'"
             )
-        books = load_pq_codebooks(sidecar, spark=spark)
         fresh = ivfpq_index_rows(
             corpus, cent_ids, cent_vecs, books, id_col=id_col,
             vec_col=vec_col, metadata_cols=metadata_cols,
         )
     else:
-        books = None
         fresh = ivf_index_rows(
             corpus, cent_ids, cent_vecs, id_col=id_col, vec_col=vec_col,
             metric=metric, metadata_cols=metadata_cols,
         )
-    clustered = cluster_by_cell(fresh, id_col, files_per_cell)
-    s3.to_parquet(
-        clustered, target_path, dataset=True, partition_cols=["cid"],
-        mode="overwrite", spark=spark,
-    )
-    if books is not None:
-        save_pq_codebooks(
-            books, f"{target_path.rstrip('/')}/_codebooks.json", spark=spark
-        )
+    _write_index(fresh, target_path, id_col, files_per_cell, books, spark)
 
 
 def _tombstone_path(index_path: str) -> str:
@@ -1798,120 +1687,31 @@ def ivfpq_partitioned_topk(
     shortlist join keys on shortlist ids), and the predicate reaches
     parquet as PushedFilters on the already-pruned code scan.
     """
-    from aws_data_wrangler_spark import s3
-
     if codebooks is None:
-        codebooks = load_pq_codebooks(
-            f"{index_path.rstrip('/')}/_codebooks.json", spark=spark
-        )
+        codebooks = load_pq_codebooks(_codebooks_path(index_path), spark=spark)
     cent_ids, cent_vecs = collect_centroids(centroids, max_cells=max_cells)
-    cents_lit = _nested_lit(cent_vecs, "array<array<double>>")
-    sub = len(codebooks[0][0])
-    q = _with_norm(queries, id_col, vec_col, "q")
-    luts = F.transform(
-        _books_lit(codebooks),
-        lambda book, s: F.transform(
-            book, lambda cent: _dot_expr(F.slice(F.col("q_vec"), s * sub + 1, sub), cent)
-        ),
-    )
-    keys_q = cell_key_array(F.col("q_vec"), cent_vecs)
-    probed = probe_cells(keys_q, len(cent_ids), nprobe)
-    q_cells = F.broadcast(
-        q.select("q_id", "q_norm", "q_vec", F.explode(probed).alias("__pc"))
-        .select(
-            "q_id",
-            "q_norm",
-            F.element_at(_nested_lit(cent_ids, "array<int>"), F.col("__pc.p")).alias("cid"),
-            _dot_expr(F.col("q_vec"), F.element_at(cents_lit, F.col("__pc.p"))).alias(
-                "q_dot_cent"
-            ),
-            luts.alias("luts"),
-        )
-    )
-    # probed cell ids → scan-pruning literals (queries×nprobe values,
-    # artifact-sized — the ivf_partitioned_topk contract)
-    probed_cids = sorted(r["cid"] for r in q_cells.select("cid").distinct().collect())
+    q_cells = _probe(queries, id_col, vec_col, cent_ids, cent_vecs, nprobe, codebooks=codebooks)
+    cids = _probed_cids(q_cells)
     # ADC pass: partition-pruned AND column-pruned — the vector column
-    # never leaves parquet here
-    # tombstoned ids are filtered from the CANDIDATE pass only — the
-    # rescore join keys on shortlist ids, so a deleted id that never
-    # reaches the shortlist can't resurface there
-    candidates = s3.read_parquet(index_path, dataset=True, spark=spark).filter(
-        F.col("cid").isin(probed_cids)
-    )
-    if where is not None:
-        candidates = candidates.filter(where)
-    codes_scan = (
-        _apply_tombstones(
-            candidates,
-            load_tombstones(spark, index_path, id_col),
-            id_col,
-        )
-        .select(
-            "cid",
-            F.col(id_col).alias("c_id"),
-            F.col("vnorm").alias("c_norm"),
-            "codes",
-        )
-    )
-    adc = F.aggregate(
-        F.zip_with(F.col("codes"), F.col("luts"), lambda cd, lut: F.element_at(lut, cd + 1)),
-        F.lit(0.0),
-        lambda a, x: a + x,
-    )
+    # never leaves parquet here. Tombstoned ids are filtered from the
+    # CANDIDATE pass only: the rescore join keys on shortlist ids, so a
+    # deleted id that never reaches the shortlist can't resurface there
     approx = (
-        codes_scan.join(q_cells, "cid")
-        .filter((F.col("q_id") != F.col("c_id")) & (F.col("c_norm") > 0))
-        .select(
-            F.col("q_id").alias("query_id"),
-            F.col("c_id").alias("neighbor_id"),
-            ((F.col("q_dot_cent") + adc) / (F.col("q_norm") * F.col("c_norm"))).alias(
-                "approx_cosine"
-            ),
-        )
+        _ivfpq_approx(_live_rows(spark, index_path, cids, id_col, where), q_cells, id_col)
         # crash-duplicated ingest rows (see index_ingest_sink) score
         # identically — collapse them so a duplicate can't occupy two
         # shortlist slots (the ivf_partitioned_topk contract)
         .dropDuplicates(["query_id", "neighbor_id"])
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("approx_cosine").desc(), F.col("neighbor_id").asc()
-    )
-    shortlist = (
-        approx.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k * rescore_factor)
-        .select("query_id", "neighbor_id")
-    )
     # exact rescore: the vector column, probed cells only
-    vec_scan = (
-        s3.read_parquet(index_path, dataset=True, spark=spark)
-        .filter(F.col("cid").isin(probed_cids))
-        .select(
-            F.col(id_col).alias("c_id"),
-            F.col(vec_col).alias("c_vec"),
-            F.col("vnorm").alias("c_norm"),
-        )
+    vec_scan = _cells_scan(spark, index_path, cids).select(
+        F.col(id_col).alias("c_id"),
+        F.col(vec_col).alias("c_vec"),
+        F.col("vnorm").alias("c_norm"),
     )
-    q_plain = F.broadcast(_with_norm(queries, id_col, vec_col, "q"))
-    rescored = (
-        shortlist.join(vec_scan, shortlist.neighbor_id == vec_scan.c_id)
-        .join(q_plain, shortlist.query_id == F.col("q_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            trunc_digits(_cosine("q_vec", "c_vec", "q_norm", "c_norm")).alias("cosine"),
-        )
-        # duplicated index rows re-multiply through the rescore join
-        .dropDuplicates(["query_id", "neighbor_id"])
-    )
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        rescored.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
+    rescored = _rescore(approx, k * rescore_factor, vec_scan, queries, id_col, vec_col)
+    # duplicated index rows re-multiply through the rescore join
+    return _top_k(rescored.dropDuplicates(["query_id", "neighbor_id"]), "cosine", k)
 
 
 # ---------------------------------------------------------------------------
@@ -1931,32 +1731,23 @@ def save_pq_codebooks(
     codebooks: List[List[List[float]]], path: str, spark=None
 ) -> None:
     """Persist PQ codebooks (``train_pq_codebooks`` output) as JSON."""
-    import json
-
-    from aws_data_wrangler_spark.s3._fs import open_s3_object
+    from aws_data_wrangler_spark.s3._fs import _write_json_artifact
 
     payload = {
-        "format": "pq_codebooks",
         "m": len(codebooks),
         "num_codes": len(codebooks[0]) if codebooks else 0,
         "sub": len(codebooks[0][0]) if codebooks and codebooks[0] else 0,
         "codebooks": codebooks,
     }
-    with open_s3_object(path, "w", spark=spark) as f:
-        json.dump(payload, f)
+    _write_json_artifact("pq_codebooks", payload, path, spark=spark)
 
 
 def load_pq_codebooks(path: str, spark=None) -> List[List[List[float]]]:
     """Load codebooks saved by ``save_pq_codebooks`` — validated shape,
     floats exact (json round-trips doubles via repr)."""
-    import json
+    from aws_data_wrangler_spark.s3._fs import _read_json_artifact
 
-    from aws_data_wrangler_spark.s3._fs import open_s3_object
-
-    with open_s3_object(path, "r", spark=spark) as f:
-        payload = json.load(f)
-    if payload.get("format") != "pq_codebooks":
-        raise ValueError(f"not a pq_codebooks artifact: {path}")
+    payload = _read_json_artifact("pq_codebooks", path, spark=spark)
     books = [
         [[float(x) for x in cent] for cent in book] for book in payload["codebooks"]
     ]
@@ -1971,32 +1762,23 @@ def save_pca(pca: dict, path: str, spark=None) -> None:
     trained-artifact persistence set: the PCA pre-transform is trained
     offline like the quantizers it feeds, so it needs the same
     save → ship → ``pca_project`` lifecycle."""
-    import json
-
-    from aws_data_wrangler_spark.s3._fs import open_s3_object
+    from aws_data_wrangler_spark.s3._fs import _write_json_artifact
 
     payload = {
-        "format": "pca",
         "dim": len(pca["mean"]),
         "out_dim": len(pca["components"]),
         "mean": [float(x) for x in pca["mean"]],
         "components": [[float(x) for x in c] for c in pca["components"]],
         "explained_variance": [float(x) for x in pca.get("explained_variance", [])],
     }
-    with open_s3_object(path, "w", spark=spark) as f:
-        json.dump(payload, f)
+    _write_json_artifact("pca", payload, path, spark=spark)
 
 
 def load_pca(path: str, spark=None) -> dict:
     """Load a ``save_pca`` artifact — validated shape, floats exact."""
-    import json
+    from aws_data_wrangler_spark.s3._fs import _read_json_artifact
 
-    from aws_data_wrangler_spark.s3._fs import open_s3_object
-
-    with open_s3_object(path, "r", spark=spark) as f:
-        payload = json.load(f)
-    if payload.get("format") != "pca":
-        raise ValueError(f"not a pca artifact: {path}")
+    payload = _read_json_artifact("pca", path, spark=spark)
     pca = {
         "mean": [float(x) for x in payload["mean"]],
         "components": [[float(x) for x in c] for c in payload["components"]],

@@ -68,6 +68,16 @@ def _strip_scheme(uri: str) -> str:
     return re.sub(r"^[a-zA-Z][a-zA-Z0-9+.-]*:(//)?", "", uri)
 
 
+def _uri_to_path_string(uri: str) -> str:
+    """An escaped URI (``file:///a%20b``) in Hadoop ``Path.toString()``
+    form (``file:/a b``): the form the non-distributed listing returns."""
+    from urllib.parse import unquote, urlsplit
+
+    parts = urlsplit(uri)
+    authority = f"//{parts.netloc}" if parts.netloc else ""
+    return f"{parts.scheme}:{authority}{unquote(parts.path)}"
+
+
 # above this many immediate children, listing fans out as a Spark job
 _PARALLEL_LIST_CHILD_THRESHOLD = 32
 
@@ -189,19 +199,20 @@ def list_objects(
         except Exception:
             distributed = False
     if distributed:
-        from pyspark.sql import functions as F
-
-        listing = (
+        # the file index's own file list, not a scan: a binaryFile scan
+        # would skip 0-byte objects the other route returns
+        files = (
             spark.read.format("binaryFile")
             .option("recursiveFileLookup", "true")
             .load(normalize_path(path))
-            .select("path")
+            .inputFiles()
         )
-        name = F.element_at(F.split(F.col("path"), "/"), -1)
-        listing = listing.filter(~name.startswith("_") & ~name.startswith("."))
-        if suffix is not None:
-            listing = listing.filter(F.col("path").endswith(suffix))
-        return sorted(r["path"] for r in listing.collect())
+        return sorted(
+            uri
+            for uri in map(_uri_to_path_string, files)
+            if not posixpath.basename(uri).startswith(("_", "."))
+            and (suffix is None or uri.endswith(suffix))
+        )
     # Spark's listStatus walk, not fs.listFiles: the local FS's listFiles
     # builds a LocatedFileStatus per file, whose permission lookup forks
     # a shell when native Hadoop is absent (~3 ms a file)
@@ -486,3 +497,24 @@ def open_s3_object(
             raw.close()
 
     return _cm()
+
+
+def _write_json_artifact(fmt: str, payload: Dict[str, Any], path: str, spark=None) -> None:
+    """Persist a small in-process artifact as one JSON object tagged
+    ``"format": fmt`` (ints round-trip exactly, doubles via repr)."""
+    import json
+
+    with open_s3_object(path, "w", spark=spark) as f:
+        json.dump({"format": fmt, **payload}, f)
+
+
+def _read_json_artifact(fmt: str, path: str, spark=None) -> Dict[str, Any]:
+    """Load a ``_write_json_artifact`` object, rejecting any other
+    format tag; each artifact still validates its own shape."""
+    import json
+
+    with open_s3_object(path, "r", spark=spark) as f:
+        payload = json.load(f)
+    if payload.get("format") != fmt:
+        raise ValueError(f"not a {fmt} artifact: {path}")
+    return payload

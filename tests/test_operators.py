@@ -280,7 +280,7 @@ class TestDedup:
         # replica of the documented two-level semantics exactly.
         import numpy as np
 
-        from aws_data_wrangler_spark.operators.dedup import _two_level_assign
+        from aws_data_wrangler_spark.operators.similarity import _two_level_assign
         from aws_data_wrangler_spark.plans.audit import plan_summary
 
         rng = np.random.RandomState(7)
@@ -298,12 +298,15 @@ class TestDedup:
             "__norm",
             F.sqrt(F.aggregate(F.transform("__v", lambda x: x * x), F.lit(0.0), lambda a, x: a + x)),
         )
-        out = _two_level_assign(pts, cents)
+        out = _two_level_assign(pts, ["__id"], F.col("__v"), F.col("__norm"), "cosine", cents)
         s = plan_summary(out)
         assert s["cartesian_products"] == 0, s["plan"]
         assert s["broadcast_nested_loop_joins"] == 0, s["plan"]
         assert s["broadcast_hash_joins"] >= 1, s["plan"]
-        rows = {int(r["__id"]): (int(r["__cell"]), float(r["__ccos"])) for r in out.collect()}
+        rows = {
+            int(r["__id"]): (int(r["cid"]), float(np.floor(-r["key"] * 1e6) / 1e6))
+            for r in out.collect()
+        }
         assert len(rows) == n_pts  # one row per point: no fan-out survives
 
         # numpy replica: supers = first ceil(sqrt(k))-bounded cids,
@@ -324,6 +327,53 @@ class TestDedup:
             assert got_cell == int(best), (i, got_cell, int(best))
             expect = float(np.floor(np.max(scores) * 1e6) / 1e6)
             assert abs(got_ccos - expect) < 2e-6, (i, got_ccos, expect)
+
+    def test_semdedup_routes_two_level_past_the_flat_bound(self, spark):
+        # the public entry point, not the private assigner: a
+        # 100_001-row centroid table must send semdedup's assignment
+        # through the two-level quantizer (broadcast-hash join on the
+        # super-cell key, no nested loop), and every verdict's
+        # (cell, centroid_cos) must match the numpy replica
+        import re
+
+        import numpy as np
+
+        from aws_data_wrangler_spark.plans.audit import plan_summary
+
+        rng = np.random.RandomState(5)
+        k, dim, n_base = 100_001, 4, 15
+        cvecs = rng.standard_normal((k, dim))
+        cents = spark.createDataFrame(
+            [(int(i), [float(x) for x in cvecs[i]]) for i in range(k)],
+            "cid int, cvec array<double>",
+        )
+        base = rng.standard_normal((n_base, dim))
+        # planted duplicates: each base vector plus a ~1e-7 nudge
+        pvecs = np.vstack([base, base + 1e-7 * rng.standard_normal((n_base, dim))])
+        pts = spark.createDataFrame(
+            [(int(i), [float(x) for x in pvecs[i]]) for i in range(len(pvecs))],
+            "vec_id int, embedding array<double>",
+        )
+        verdicts = dedup.semdedup(pts, centroids=cents, eps=0.05)
+        s = plan_summary(verdicts)
+        assert re.search(r"BroadcastHashJoin \[__scell#", s["plan"]), s["plan"]
+        assert s["broadcast_nested_loop_joins"] == 0, s["plan"]
+        assert s["cartesian_products"] == 0, s["plan"]
+        rows = verdicts.collect()
+        twins_found = {r["vec_id"] % n_base for r in rows}
+        assert len(twins_found) >= n_base - 2, twins_found  # near-all twins share a cell
+
+        n_super = max(1, min(1024, int(k ** 0.5) + 1))
+        norm = lambda a: np.linalg.norm(a, axis=1)
+        cos = lambda a, b: (a @ b.T) / (norm(a)[:, None] * norm(b)[None, :])
+        child_super = np.argmax(cos(cvecs, cvecs[:n_super]), axis=1)
+        for r in rows:
+            v = pvecs[r["vec_id"] : r["vec_id"] + 1]
+            members = np.where(child_super == np.argmax(cos(v, cvecs[:n_super])[0]))[0]
+            scores = cos(v, cvecs[members])[0]
+            assert r["cell"] == int(members[int(np.argmax(scores))]), r
+            expect = float(np.floor(np.max(scores) * 1e6) / 1e6)
+            assert abs(r["centroid_cos"] - expect) < 2e-6, (r, expect)
 
     def test_embedding_lsh_matches_exact_in_near_dup_regime(self, spark, embeddings):
         # noisy twins at cosine ≳ 0.99: the LSH-bucketed miner must find
@@ -4874,6 +4924,15 @@ class TestProfiling:
         # NULLs excluded on both counts (the count(col) convention)
         assert got["w"]["n_distinct_est"] == 200 - len(range(0, 200, 7))
         assert got["w"]["n_rows"] == 200 - len(range(0, 200, 7))
+
+    def test_kmv_sketches_rejects_duplicate_cols(self, spark):
+        # ["v", "v"] used to collapse into one fused row while the
+        # stats explode double-joined its candidates: reject at entry
+        from aws_data_wrangler_spark.operators import profiling
+
+        df = spark.range(50).selectExpr("CAST(id AS STRING) AS v", "id AS w")
+        with pytest.raises(ValueError, match="distinct.*'v'"):
+            profiling.kmv_sketches(df, ["v", "w", "v"], k=16)
 
     def test_kmv_union_bit_identical_and_estimator_regime(self, spark):
         # batched sketches must union BIT-IDENTICALLY to the single

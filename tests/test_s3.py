@@ -495,10 +495,15 @@ class TestObjectOps:
         ):
             os.makedirs(os.path.dirname(os.path.join(base, rel)), exist_ok=True)
             with open(os.path.join(base, rel), "w") as f:
-                f.write("x")  # the file-index route skips empty files
+                f.write("x")
+        # a 0-byte object under a partition value with a space: both
+        # routes list it (a binaryFile SCAN would skip empty files)
+        os.makedirs(os.path.join(base, "a=x y"))
+        open(os.path.join(base, "a=x y", "empty.bin"), "w").close()
         os.makedirs(os.path.join(base, "empty_dir"))
         expected = {f"{base}/d{i:02d}/part.parquet" for i in range(34)} | {
             f"{base}/_yr=2024/part.parquet",
+            f"{base}/a=x y/empty.bin",
             f"{base}/{awkward}",
             f"{base}/k=plain/k2=ü/part-1.parquet",
             f"{base}/k=plain/k2=ü/readme.txt",

@@ -50,6 +50,35 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
     return df
 
 
+def compare(sdf: pd.DataFrame, odf: pd.DataFrame) -> list:
+    """The gate's verdict on one query: the list of problems between
+    the Spark result and its oracle result (empty = match) — row count,
+    column names, then order-insensitive values (exact; a 1e-9 retry
+    only labels float noise, it still fails) and dtypes."""
+    problems = []
+    if len(sdf) != len(odf):
+        problems.append(f"rows {len(sdf)} vs {len(odf)}")
+    if sorted(sdf.columns) != sorted(odf.columns):
+        problems.append(f"cols {sorted(sdf.columns)} vs {sorted(odf.columns)}")
+    if problems:
+        return problems
+    a, b = canon(sdf), canon(odf)
+    try:
+        pd.testing.assert_frame_equal(a, b, check_dtype=False, check_exact=True)
+    except AssertionError as err:
+        # retry with tolerance to distinguish float-noise from logic bugs
+        try:
+            pd.testing.assert_frame_equal(a, b, check_dtype=False, rtol=1e-9, atol=1e-9)
+            problems.append("float-noise (passes at 1e-9 tol — EXACT HASH WOULD FAIL)")
+        except AssertionError:
+            problems.append(f"values differ: {str(err)[:300]}")
+    # dtype check (schema gate)
+    for col in a.columns:
+        if str(a[col].dtype) != str(b[col].dtype):
+            problems.append(f"dtype {col}: {a[col].dtype} vs {b[col].dtype}")
+    return problems
+
+
 def main() -> int:
     import __spark_entry__ as entrymod
     from aws_data_wrangler_spark import get_spark
@@ -80,26 +109,7 @@ def main() -> int:
             traceback.print_exc()
             failures.append(name)
             continue
-        problems = []
-        if len(sdf) != len(odf):
-            problems.append(f"rows {len(sdf)} vs {len(odf)}")
-        if sorted(sdf.columns) != sorted(odf.columns):
-            problems.append(f"cols {sorted(sdf.columns)} vs {sorted(odf.columns)}")
-        if not problems:
-            a, b = canon(sdf), canon(odf)
-            try:
-                pd.testing.assert_frame_equal(a, b, check_dtype=False, check_exact=True)
-            except AssertionError as err:
-                # retry with tolerance to distinguish float-noise from logic bugs
-                try:
-                    pd.testing.assert_frame_equal(a, b, check_dtype=False, rtol=1e-9, atol=1e-9)
-                    problems.append("float-noise (passes at 1e-9 tol — EXACT HASH WOULD FAIL)")
-                except AssertionError:
-                    problems.append(f"values differ: {str(err)[:300]}")
-            # dtype check (schema gate)
-            for col in a.columns:
-                if str(a[col].dtype) != str(b[col].dtype):
-                    problems.append(f"dtype {col}: {a[col].dtype} vs {b[col].dtype}")
+        problems = compare(sdf, odf)
         if problems:
             print(f"FAIL {name}: {'; '.join(problems)}  [{time.time()-t0:.1f}s]")
             failures.append(name)
