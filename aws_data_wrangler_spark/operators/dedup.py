@@ -9,12 +9,16 @@ Eight strategies, all shuffle-disciplined for 100 TB:
   sharing a shingle ever meet; super-frequent shingles are dropped
   (document-frequency cap) to bound the join fan-out — the standard
   skew control for near-dup mining.
-- MinHash + LSH: per-doc signature via k independent hash slots
-  (xxhash64, JVM codegen), banded; candidate pairs from equi-join on
-  (band, band-hash) buckets, then *verified* with exact Jaccard —
-  output precision 1.0, recall governed by (bands, rows). Incremental
-  batch-vs-corpus variant with a persistable corpus-state artifact
-  and per-batch cache-hygiene (``release_batch_state``).
+- MinHash + LSH: one materialized per-row shingle-set table (id, sh)
+  feeds both the per-doc signature (k xxhash64 slots, one codegen
+  groupBy) and the exact-Jaccard verify; candidate pairs from an
+  equi-join on (band, band-hash) buckets; the verify broadcasts the
+  distinct candidate ids only and shuffles only candidate documents'
+  sets — output precision 1.0, recall governed by (bands, rows). Rows
+  sharing an id are one document. The result carries its set table
+  for ``release_batch_state``.
+  Incremental batch-vs-corpus variant with a persistable corpus-state
+  artifact and the same per-batch cache hygiene.
 - SimHash: 64-bit signature from per-token hash bit votes; candidate
   pairs via 4×16-bit band pigeonhole (hamming ≤ 3 ⇒ some band equal),
   verified with ``bit_count(xor) <= k``.
@@ -112,6 +116,23 @@ def word_shingles(
     remains the default for operators whose oracle intersects literal
     shingle strings.
     """
+    out = _shingle_sets(df, id_col, text_col, n, hashed, explode=True)
+    if max_doc_frequency is not None:
+        # the USING join moves the key to column 0 — restore (id,
+        # shingle) order, which downstream positional toDF relies on
+        out = out.join(_rare_shingles(out, max_doc_frequency), "shingle", "left_semi").select(
+            id_col, "shingle"
+        )
+    return out
+
+
+def _shingle_sets(
+    df: DataFrame, id_col: str, text_col: str, n: int, hashed: bool, explode: bool = False
+) -> DataFrame:
+    """(id, sh): one row per input row with at least ``n`` tokens, ``sh``
+    its distinct ``n``-word shingles (see ``word_shingles`` for the two
+    shingle representations). Input rows sharing an id stay separate
+    rows. ``explode=True`` returns the (id, shingle) rows instead."""
     tokens = F.split(F.trim(F.col(text_col)), r"\s+")
     # tokenize in its OWN projection: the lambda below references the
     # token array many times, and since SPARK-36718 CollapseProject
@@ -119,34 +140,34 @@ def word_shingles(
     # one regex split per row instead of one per shingle slot
     # (measured 4× on the shingle stage at sf0.1)
     base = df.filter(F.size(tokens) >= n).select(F.col(id_col), tokens.alias("__toks"))
-    t = F.col("__toks")
-    idx = F.sequence(F.lit(0), F.size(t) - n)
+    # one parsed lambda: the Column-built one cost ~170 more Py4J round trips
     if hashed:
-        shingle = F.transform(
-            idx,
-            lambda i: F.xxhash64(
-                *[F.element_at(t, (i + j + 1).cast("int")) for j in range(n)]
-            ),
-        )
+        args = ", ".join(f"element_at(__toks, i + {j + 1})" for j in range(n))
+        body = f"xxhash64({args})"
     else:
-        shingle = F.transform(idx, lambda i: F.concat_ws(" ", F.slice(t, i + 1, n)))
-    # array_distinct dedups within the doc BEFORE the explode, so the
-    # exploded (id, shingle) pairs are already unique — no global
-    # distinct shuffle needed
-    out = base.select(
-        F.col(id_col), F.explode(F.array_distinct(shingle)).alias("shingle")
+        body = f"concat_ws(' ', slice(__toks, i + 1, {n}))"
+    shingle = F.expr(f"transform(sequence(0, size(__toks) - {n}), i -> {body})")
+    # array_distinct dedups within the doc, so the exploded (id,
+    # shingle) pairs are already unique — no global distinct shuffle
+    sh = F.array_distinct(shingle)
+    if explode:
+        # explode in THIS projection: exploding a projected array column
+        # lets the optimizer infer a size(sh) > 0 filter and push it below
+        # the tokenizer, re-splitting the text once per shingle (measured
+        # 10x on the uncached signature path)
+        return base.select(F.col(id_col), F.explode(sh).alias("shingle"))
+    return base.select(F.col(id_col), sh.alias("sh"))
+
+
+def _rare_shingles(shingles: DataFrame, max_doc_frequency: int) -> DataFrame:
+    """The shingles of (id, shingle) rows held by at most
+    ``max_doc_frequency`` rows."""
+    return (
+        shingles.groupBy("shingle")
+        .agg(F.count(F.lit(1)).alias("df_"))
+        .filter(F.col("df_") <= max_doc_frequency)
+        .select("shingle")
     )
-    if max_doc_frequency is not None:
-        rare = (
-            out.groupBy("shingle")
-            .agg(F.count(F.lit(1)).alias("df_"))
-            .filter(F.col("df_") <= max_doc_frequency)
-            .select("shingle")
-        )
-        # the USING join moves the key to column 0 — restore (id,
-        # shingle) order, which downstream positional toDF relies on
-        out = out.join(rare, "shingle", "left_semi").select(id_col, "shingle")
-    return out
 
 
 def ngram_jaccard_pairs(
@@ -325,29 +346,26 @@ def minhash_signatures(
     shingle column already IS the 64-bit base
     (``word_shingles(hashed=True)``) and is used directly.
     """
-    base = F.col("shingle") if prehashed else F.xxhash64(F.col("shingle"))
-    based = shingles.withColumn("__base", base)
-    mins = [
-        F.min(F.xxhash64(F.col("__base"), F.lit(i))).alias(f"h{i}") for i in range(num_hashes)
-    ]
-    sig = based.groupBy(id_col).agg(*mins)
-    return sig.select(F.col(id_col), F.array(*[f"h{i}" for i in range(num_hashes)]).alias("sig"))
+    if not prehashed:
+        shingles = shingles.select(F.col(id_col), F.xxhash64("shingle").alias("shingle"))
+    # the whole hash family is ONE parsed expression: built slot by slot
+    # from Column objects it cost ~2,200 Py4J round trips at 48 slots
+    slots = ", ".join(f"min(xxhash64(shingle, {i}))" for i in range(num_hashes))
+    return shingles.groupBy(id_col).agg(F.expr(f"array({slots})").alias("sig"))
 
 
 def _banded_rows(sig: DataFrame, id_col: str, num_hashes: int, bands: int) -> DataFrame:
     """(id, band, bucket) rows: signature split into ``bands`` bands of
     ``num_hashes/bands`` slots, each band hashed to one bucket key."""
     rows_per_band = num_hashes // bands
+    buckets = ", ".join(
+        "xxhash64("
+        + ", ".join(f"sig[{i}]" for i in range(b * rows_per_band, (b + 1) * rows_per_band))
+        + ")"
+        for b in range(bands)
+    )
     return sig.select(
-        F.col(id_col),
-        F.posexplode(
-            F.array(
-                *[
-                    F.xxhash64(*[F.col("sig")[i] for i in range(b * rows_per_band, (b + 1) * rows_per_band)])
-                    for b in range(bands)
-                ]
-            )
-        ).alias("band", "bucket"),
+        F.col(id_col), F.posexplode(F.expr(f"array({buckets})")).alias("band", "bucket")
     )
 
 
@@ -518,11 +536,9 @@ def minhash_lsh_incremental(
         .groupBy(id_col)
         .agg(F.collect_set("shingle").alias("sh"))
     )
-    # join strategy left to AQE (same reasoning as minhash_lsh_pairs):
-    # the set aggregates sit behind shuffles, so AQE broadcasts them
-    # only when their runtime size fits — replacing the former
-    # driver-side candidate-count guard at equal scale safety and one
-    # fewer eager job per batch
+    # join strategy left to AQE: the set aggregates sit behind shuffles,
+    # so AQE broadcasts them only when their runtime size fits, and one
+    # giant near-dup cluster gets a shuffled join instead
     paired = candidates.join(sets_new.toDF("new_id", "sh_n"), "new_id").join(
         sets_corpus.toDF("corpus_id", "sh_c"), "corpus_id"
     )
@@ -548,9 +564,13 @@ def minhash_lsh_incremental(
 def release_batch_state(result: DataFrame, blocking: bool = False) -> int:
     """Release the per-batch caches behind a ``minhash_lsh_incremental``
     result (batch-side shingles, candidate pairs, and — when the corpus
-    state was derived inline — the corpus shingle cache), or behind a
+    state was derived inline — the corpus shingle cache), behind a
     ``ngram_jaccard_pairs`` / ``containment_pairs`` result (the shared
-    ``_shingle_overlap`` shingle cache).
+    ``_shingle_overlap`` shingle cache), behind a ``minhash_lsh_pairs``
+    result (its shingle-set table), behind a ``cluster_pairs`` result
+    (the surviving label snapshot) or behind a ``semdedup`` /
+    ``semdedup_prune`` result (the cell-assignment cache and the label
+    snapshot).
 
     The production ingest loop is: build ``minhash_corpus_state`` once
     → per batch run ``minhash_lsh_incremental(corpus_state=...)``,
@@ -595,6 +615,7 @@ def release_batch_state(result: DataFrame, blocking: bool = False) -> int:
         return 0
     for cached in caches:
         cached.unpersist(blocking)
+        _release_local_checkpoint(cached, blocking)
     return len(caches)
 
 
@@ -632,6 +653,22 @@ def minhash_lsh_pairs(
     bucket join replaces the all-pairs shingle join with a join whose
     fan-out is the bucket size.
 
+    Plan: ONE materialized per-row shingle-set table ``(id, sh
+    array<bigint>)`` (hashed shingles, distinct within the row; a lazy
+    ``localCheckpoint``) feeds both consumers — the signature aggregate
+    explodes it, and the verify explodes only the candidate documents'
+    rows of it. The one forced broadcast is the distinct candidate ids
+    (linear in candidate documents, never in pairs); it restricts the
+    set table to candidate documents before their sets are gathered,
+    so the corpus's sets never cross an exchange or a broadcast. The
+    joins that bring each pair's two sets together are left to AQE.
+
+    Rows sharing an id are one document: the signature takes the min
+    over all of their shingles and the verify unions their sets.
+
+    The result carries the set table as ``_sg_batch_caches``: consume
+    the result, then ``release_batch_state(result)`` frees it.
+
     Defaults: 48 slots × 16 bands (3 rows/band) — measured ~2× faster
     end-to-end than 64×16 with P(candidate | j=0.8) ≈ 0.99997 and
     ~1.6% false candidates at j=0.1, all killed by the exact verify.
@@ -640,74 +677,56 @@ def minhash_lsh_pairs(
     doc (map-side partial min) — there is no shingle self-join to fan
     out, and the band join's fan-out is bounded by banding itself, so
     the cap would add a groupBy+semi-join shuffle for no scale benefit.
+    With a cap, both the signatures and the verified sets hold only
+    the retained shingles.
     """
-    shingles = word_shingles(df, id_col, text_col, n, max_doc_frequency, hashed=True).cache()
-    sig = minhash_signatures(shingles, id_col, num_hashes, prehashed=True)
-    # cache the banded table: ``bands`` rows per doc (MBs per
-    # million docs). The band self-join references this subplan through
-    # *renamed* (toDF) branches, which canonicalize to different
-    # exchanges — without materialization Spark recomputes the whole
-    # shingle→hash pipeline once per reference (measured 6×).
-    # Materializing once is the same checkpoint a cluster pipeline
-    # would persist; caching HERE (not the signature table) covers the
-    # signature agg with the same single action.
-    band_rows = _banded_rows(sig, id_col, num_hashes, bands).cache()
-    # candidate pair set is tiny (near-dups + band collisions); cache
-    # it too — it is referenced three times in verification
+    # the set table is a lazy local checkpoint, not a cache: Spark's
+    # adaptive execution wraps every scan of a cached table in its own
+    # query stage and reuses no exchange above one, so over a cache the
+    # band self-join would run the signature aggregate once per side and
+    # the plan one cache-materialization job per reference. Above a
+    # checkpoint scan identical exchanges are reused: the signature
+    # aggregate and the candidate pipeline each run once however often
+    # the verify references them. As with any local checkpoint, its
+    # blocks live only on the executors: losing one fails the call
+    # instead of recomputing the table.
+    sets = _shingle_sets(df, id_col, text_col, n, hashed=True).localCheckpoint(eager=False)
+    shingles = sets.select(F.col(id_col), F.explode("sh").alias("shingle"))
+    if max_doc_frequency is not None:
+        shingles = shingles.join(_rare_shingles(shingles, max_doc_frequency), "shingle", "left_semi")
+    band_rows = _banded_rows(
+        minhash_signatures(shingles, id_col, num_hashes, prehashed=True), id_col, num_hashes, bands
+    )
     candidates = (
         band_rows.toDF("id_a", "band", "bucket")
         .join(band_rows.toDF("id_b", "band", "bucket"), ["band", "bucket"])
         .filter(F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b")
         .distinct()
-        .cache()
     )
-    # exact-Jaccard verification of candidates only: restrict shingles
-    # to candidate docs FIRST (broadcast semi-join — no shuffle of the
-    # corpus), gather each candidate doc's shingle SET, then join the
-    # two sets onto each pair and intersect JVM-side. One shuffle (the
-    # set agg) instead of the shingle self-join + two size joins; the
-    # pair joins broadcast (candidate sets are tiny by construction —
-    # that's the point of LSH).
-    # the distinct is load-bearing here beyond dedup: it puts a shuffle
-    # stage between the broadcast build and the two cached-candidates
-    # reads, so the cache is populated once before both union branches
-    # consume it. Without it the broadcast job races the unpopulated
-    # cache and computes the whole shingle→band→join pipeline twice
-    # (measured +2.3 s at sf0.1).
-    cand_ids = (
-        candidates.select(F.col("id_a").alias(id_col))
-        .union(candidates.select(F.col("id_b").alias(id_col)))
-        .distinct()
-    )
+    # exact-Jaccard verify of candidates only: the one forced broadcast
+    # is the distinct candidate ids (linear in candidate documents),
+    # which restricts the shingles to candidate documents before the
+    # set aggregate, so only their sets are ever shuffled. The pair-to-
+    # set joins are left to AQE: it broadcasts the sets when their
+    # runtime size fits, and one giant near-dup cluster gets a shuffled
+    # join that scales with the cluster instead of the driver.
+    cand_ids = candidates.select(F.explode(F.array("id_a", "id_b")).alias(id_col)).distinct()
     cand_sets = (
         shingles.join(F.broadcast(cand_ids), id_col, "left_semi")
         .groupBy(id_col)
         .agg(F.collect_set("shingle").alias("sh"))
     )
-    # join strategy for the per-doc shingle SETS is left to AQE: the
-    # sets aggregate sits behind a shuffle stage, so AQE knows its
-    # RUNTIME byte size and broadcasts only when it actually fits —
-    # the small-candidate LSH outcome gets the broadcast join, while
-    # one giant near-dup cluster of long boilerplate docs (sets past
-    # the broadcast limit) gets a shuffled join that scales with the
-    # cluster instead of the driver. This replaces the former
-    # driver-side 100k-pair count guard: same safety, decided on
-    # actual bytes, and one fewer eager job per call (measured ~0.6 s
-    # at sf0.1 — stage overhead dominates these tiny-data phases).
     paired = candidates.join(cand_sets.toDF("id_a", "sh_a"), "id_a").join(
         cand_sets.toDF("id_b", "sh_b"), "id_b"
     )
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
     union_sz = F.size("sh_a") + F.size("sh_b") - inter
-    return (
-        paired.select(
-            "id_a",
-            "id_b",
-            trunc_digits(inter / union_sz).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
+    out = paired.select(
+        "id_a", "id_b", trunc_digits(inter / union_sz).alias("jaccard")
+    ).filter(F.col("jaccard") >= threshold)
+    out._sg_batch_caches = [sets]
+    return out
 
 
 def duplicated_spans(
@@ -1060,7 +1079,7 @@ def hamming_pairs(
     )
 
 
-def _release_local_checkpoint(df: DataFrame) -> None:
+def _release_local_checkpoint(df: DataFrame, blocking: bool = False) -> None:
     """Unpersist the snapshot RDD behind a ``localCheckpoint``'d frame.
 
     ``localCheckpoint`` truncates lineage to a ``LogicalRDD`` whose
@@ -1071,7 +1090,7 @@ def _release_local_checkpoint(df: DataFrame) -> None:
     try:
         plan = df._jdf.queryExecution().analyzed()
         if plan.getClass().getSimpleName() == "LogicalRDD":
-            plan.rdd().unpersist(False)
+            plan.rdd().unpersist(blocking)
     except Exception:
         pass  # best-effort: storage pressure, not correctness
 
@@ -1175,7 +1194,10 @@ def cluster_pairs(
         if changed == 0:
             break
     edges.unpersist()
-    return labels.select(F.col("node").alias(id_col), F.col("label").alias("cluster_id"))
+    out = labels.select(F.col("node").alias(id_col), F.col("label").alias("cluster_id"))
+    # the surviving label snapshot, for release_batch_state
+    out._sg_batch_caches = [labels]
+    return out
 
 
 def _lsh_params_for_threshold(
@@ -1470,7 +1492,10 @@ def semdedup(
     Returns per-row verdicts for every member of a duplicate group:
     (id, cell, centroid_cos, group_id, keep) — rows in no group are
     implicitly kept and not returned (use ``semdedup_prune`` for the
-    surviving corpus). ``group_id`` = min member id.
+    surviving corpus). ``group_id`` = min member id. The result carries
+    the cached cell assignment and the grouping's label snapshot as
+    ``_sg_batch_caches``; free them with ``release_batch_state`` once
+    the verdicts are consumed.
 
     ``centroids`` (cid int, cvec array) short-circuits training: pass a
     pre-trained table (``similarity.train_ivf_centroids``, persisted)
@@ -1565,7 +1590,7 @@ def semdedup(
     labels = cluster_pairs(pairs, members, id_col="__id", checkpoint=checkpoint)
     order = F.col("centroid_cos").asc() if keep == "farthest" else F.col("centroid_cos").desc()
     w = Window.partitionBy("group_id").orderBy(order, F.col(id_col).asc())
-    return (
+    out = (
         labels.join(
             assigned.select(
                 F.col("__id"),
@@ -1582,6 +1607,8 @@ def semdedup(
         )
         .withColumn("keep", F.row_number().over(w) == 1)
     )
+    out._sg_batch_caches = [assigned, *labels._sg_batch_caches]
+    return out
 
 
 def semdedup_prune(
@@ -1592,10 +1619,11 @@ def semdedup_prune(
 ) -> DataFrame:
     """The surviving corpus after ``semdedup``: drops every duplicate-
     group member except the kept representative (left-anti join on the
-    dropped ids — the group tables are tiny relative to the corpus)."""
+    dropped ids — the group tables are tiny relative to the corpus).
+    Carries ``semdedup``'s release handle."""
     verdicts = semdedup(df, id_col=id_col, vec_col=vec_col, **kwargs)
     drops = verdicts.filter(~F.col("keep")).select(F.col(id_col))
-    return df.join(drops, id_col, "left_anti")
+    return carry_batch_caches(df.join(drops, id_col, "left_anti"), verdicts)
 
 
 def _gemm_near_dup_pairs(

@@ -71,6 +71,43 @@ def assert_no_cartesian(df: DataFrame) -> None:
     ), f"expected no cartesian/nested-loop join:\n{summary['plan']}"
 
 
+def _logical_nodes(df: DataFrame, stage: str = "withCachedData"):
+    stack = [getattr(df._jdf.queryExecution(), stage)()]
+    while stack:
+        node = stack.pop()
+        yield node
+        children = node.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+
+
+def cached_relations(df: DataFrame) -> int:
+    """Number of distinct materialized tables the plan reads: cached
+    ones (``cache`` / ``persist``) and persisted local checkpoints; a
+    table read by several branches counts once."""
+    system = df.sparkSession._jvm.java.lang.System
+    seen = set()
+    for node in _logical_nodes(df):
+        kind = node.getClass().getSimpleName()
+        if kind == "InMemoryRelation":
+            seen.add(("cache", system.identityHashCode(node.cacheBuilder())))
+        elif kind == "LogicalRDD" and node.rdd().getStorageLevel().isValid():
+            seen.add(("rdd", node.rdd().id()))
+    return len(seen)
+
+
+def forced_broadcasts(df: DataFrame) -> list:
+    """The column names of every relation the plan forces into a
+    broadcast (``F.broadcast`` / a BROADCAST hint), one list each."""
+    out = []
+    for node in _logical_nodes(df, "analyzed"):
+        if node.getClass().getSimpleName() == "ResolvedHint":
+            strategy = node.hints().strategy()
+            if strategy.isDefined() and "BROADCAST" in strategy.get().toString().upper():
+                attrs = node.output()
+                out.append([attrs.apply(i).name() for i in range(attrs.size())])
+    return out
+
+
 def assert_pushdown(df: DataFrame) -> None:
     """Filters must reach the parquet scan (PushedFilters non-empty)."""
     summary = plan_summary(df)

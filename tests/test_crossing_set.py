@@ -67,8 +67,10 @@ def test_r11_shingle_overlap_crossing_trio():
     assert _rows("_shingle_overlap") == {
         "dedup_ngram_jaccard", "dedup_containment", "dedup_clusters",
     }
+    # dedup_minhash_lsh threads its shingle-set cache handle the same way
     assert _rows("carry_batch_caches") == {
         "dedup_ngram_jaccard", "dedup_containment", "dedup_clusters",
+        "dedup_minhash_lsh",
     }
 
 

@@ -69,11 +69,180 @@ class TestDedup:
         exact = dedup.ngram_jaccard_pairs(documents, threshold=0.8)
         lsh = dedup.minhash_lsh_pairs(documents, num_hashes=64, bands=32, threshold=0.8)
         exact_set = {(r["id_a"], r["id_b"]) for r in exact.collect()}
-        lsh_set = {(r["id_a"], r["id_b"]) for r in lsh.collect()}
+        lsh_rows = sorted(tuple(r) for r in lsh.collect())
+        lsh_set = {(a, b) for a, b, _ in lsh_rows}
+        # the exact list the exploded-shingle implementation returned at
+        # this non-default width
+        assert lsh_rows == [
+            (0, 50, 0.95238), (0, 82, 0.954545), (5, 450, 0.975609), (8, 12, 0.973684),
+            (8, 120, 0.986486), (8, 360, 0.986666), (12, 120, 0.960526), (12, 360, 0.986842),
+            (16, 369, 0.988235), (26, 176, 0.988505), (33, 436, 0.888888), (45, 487, 0.964285),
+            (50, 82, 0.90909), (56, 157, 0.981481), (77, 459, 0.987179), (89, 114, 0.928571),
+            (99, 174, 0.988095), (110, 467, 0.98913), (119, 425, 0.971428), (120, 360, 0.973333),
+            (144, 161, 0.988636), (211, 404, 0.984615), (229, 263, 0.956521), (260, 391, 0.988764),
+            (270, 329, 0.988095), (328, 428, 0.974358), (349, 411, 0.980769), (474, 498, 0.989361),
+        ]
         assert lsh_set <= exact_set or lsh_set == exact_set  # precision 1.0 (verified)
         if exact_set:
             recall = len(lsh_set & exact_set) / len(exact_set)
             assert recall >= 0.95
+
+    def test_minhash_lsh_pairs_edge_cases_keep_their_values(self, spark):
+        # values pinned from the exploded-shingle implementation the
+        # one-set-table plan replaced; the hashed 3-shingle sets below
+        # make each jaccard checkable by hand
+        def pairs(df, **kwargs):
+            return sorted(tuple(r) for r in dedup.minhash_lsh_pairs(df, **kwargs).collect())
+
+        schema = "doc_id long, text string"
+        # rows sharing an id are ONE document: id 1's two rows union to
+        # 8 of id 2's 10 shingles (0.8); id 3 is one row twice, 4 of id
+        # 4's 5 shingles (0.8); 5 and 6 share 3 of 5 shingles (0.6)
+        dup = spark.createDataFrame(
+            [
+                (1, "a b c d e f"), (1, "g h i j k l"), (2, "a b c d e f g h i j k l"),
+                (3, "m n o p q r"), (3, "m n o p q r"), (4, "m n o p q r s"),
+                (5, "t u v w x y"), (6, "t u v w x z"),
+            ],
+            schema,
+        )
+        assert pairs(dup, threshold=0.1) == [(1, 2, 0.8), (3, 4, 0.8), (5, 6, 0.6)]
+        # shorter than n tokens, null and empty text: no shingles, no pairs
+        short = spark.createDataFrame(
+            [(1, "a b"), (2, None), (3, "x y z w"), (4, "x y z w"), (5, ""), (6, "a b")], schema
+        )
+        assert pairs(short, threshold=0.1) == [(3, 4, 1.0)]
+        empty = dedup.minhash_lsh_pairs(spark.createDataFrame([], schema))
+        assert empty.collect() == []
+        assert empty.schema.simpleString() == "struct<id_a:bigint,id_b:bigint,jaccard:double>"
+        # the document-frequency cap: "common boiler plate" and "boiler
+        # plate header" sit in 5 rows, "alpha beta gamma" / "beta gamma
+        # delta" / "gamma delta eps" in 3, "delta eps zeta" in 2
+        cap = spark.createDataFrame(
+            [(i, f"common boiler plate header u{i} v{i} w{i} x") for i in range(4)]
+            + [
+                (10, "alpha beta gamma delta eps zeta"),
+                (11, "alpha beta gamma delta eps eta"),
+                (12, "common boiler plate header alpha beta gamma delta eps zeta"),
+            ],
+            schema,
+        )
+        assert pairs(cap, threshold=0.1) == [(1, 2, 0.2), (10, 11, 0.6), (10, 12, 0.5)]
+        assert pairs(cap, threshold=0.1, max_doc_frequency=3) == [
+            (10, 11, 0.6), (10, 12, 0.666666), (11, 12, 0.428571),
+        ]
+        assert pairs(cap, threshold=0.1, max_doc_frequency=2) == [(10, 12, 0.333333)]
+
+    @staticmethod
+    def _planted_near_dups(spark, n_docs=80):
+        """``n_docs`` random 40-word docs over a 400-word vocabulary, of
+        which docs 0-9 have a copy (id + 1000) with one word replaced;
+        returns the frame and the expected {(id_a, id_b): jaccard}."""
+        import random
+
+        rng = random.Random(7)
+        texts = {i: [f"w{rng.randrange(400)}" for _ in range(40)] for i in range(n_docs)}
+        for i in range(10):
+            copy = list(texts[i])
+            copy[20] = "planted"
+            texts[i + 1000] = copy
+
+        def shingles(toks):
+            return {tuple(toks[k : k + 3]) for k in range(len(toks) - 2)}
+
+        want = {}
+        for i in range(10):
+            a, b = shingles(texts[i]), shingles(texts[i + 1000])
+            want[(i, i + 1000)] = len(a & b) / len(a | b)
+        df = spark.createDataFrame(
+            [(i, " ".join(t)) for i, t in texts.items()], "doc_id long, text string"
+        )
+        return df, want
+
+    def test_minhash_lsh_pairs_job_and_plan_build_budget(self, spark, monkeypatch):
+        # one materialized shingle-set table and one parsed expression per
+        # hash family: the exploded-shingle / band-row / candidate caches
+        # cost 19 Spark jobs a call, and the Column-by-Column hash
+        # families ~5,000 Py4J round trips before any job started
+        docs, want = self._planted_near_dups(spark)
+        client = spark.sparkContext._gateway._gateway_client
+        calls = []
+        send = client.send_command
+
+        def counting(*args, **kwargs):
+            calls.append(1)
+            return send(*args, **kwargs)
+
+        with monkeypatch.context() as m:
+            m.setattr(client, "send_command", counting)
+            result = dedup.minhash_lsh_pairs(docs, threshold=0.5)
+        sc = spark.sparkContext
+        sc.setJobGroup("minhash-lsh-budget", "minhash-lsh-budget")
+        try:
+            got = result.toPandas()
+        finally:
+            sc.setJobGroup(None, None)
+        jobs = len(sc.statusTracker().getJobIdsForGroup("minhash-lsh-budget"))
+        dedup.release_batch_state(result, blocking=True)
+        found = {(int(a), int(b)): j for a, b, j in got.itertuples(index=False)}
+        assert found.keys() == want.keys()
+        assert all(abs(found[k] - want[k]) <= 1e-6 for k in want)
+        assert jobs <= 10, f"{jobs} jobs"
+        assert len(calls) <= 1000, f"{len(calls)} Py4J round trips to build the plan"
+
+    def test_minhash_lsh_pairs_broadcasts_candidate_ids_not_pairs(self, spark):
+        # one cluster of 60 exact copies is 1,770 candidate pairs: the one
+        # forced broadcast must stay the distinct candidate ids (60 rows),
+        # never the pair table, which grows with the square of the cluster
+        from aws_data_wrangler_spark.plans.audit import forced_broadcasts
+
+        rows = [(i, "the same boiler plate page for every copy") for i in range(60)]
+        rows += [(100 + i, f"unique doc {i} with words a{i} b{i} c{i}") for i in range(20)]
+        docs = spark.createDataFrame(rows, "doc_id long, text string")
+        pairs = dedup.minhash_lsh_pairs(docs)
+        try:
+            assert forced_broadcasts(pairs)
+            assert all(cols == ["doc_id"] for cols in forced_broadcasts(pairs))
+            got = pairs.collect()
+            assert len(got) == 60 * 59 // 2
+            assert {r["jaccard"] for r in got} == {1.0}
+            assert all(r["id_b"] < 60 for r in got)
+        finally:
+            dedup.release_batch_state(pairs, blocking=True)
+
+    def test_minhash_lsh_pairs_and_semdedup_release_their_caches(self, spark, embeddings):
+        # each result carries its cache; releasing it unpersists every RDD
+        # the call persisted. Tracked by RDD id, not by count: the context
+        # cleaner may free earlier tests' garbage at any moment (fresh
+        # inputs, so no earlier test's cache entry can be hit or freed)
+        import random
+
+        def persisted():
+            return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+        docs, _ = self._planted_near_dups(spark, n_docs=30)
+        before = persisted()
+        pairs = dedup.minhash_lsh_pairs(docs, threshold=0.5)
+        assert pairs.count() == 10
+        made = persisted() - before
+        assert made
+        assert dedup.release_batch_state(pairs, blocking=True) == 1
+        assert not made & persisted()
+
+        rng = random.Random(3)
+        vecs = [[rng.gauss(0, 1) for _ in range(8)] for _ in range(40)]
+        rows = [(i, v) for i, v in enumerate(vecs)]
+        rows += [(i + 100, [x + 0.001 for x in vecs[i]]) for i in range(5)]
+        emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+        for run in (dedup.semdedup, dedup.semdedup_prune):
+            before = persisted()
+            result = run(emb, num_clusters=4, iterations=0)
+            result.collect()
+            made = persisted() - before
+            assert made
+            # the cell assignment and the grouping's label snapshot
+            assert dedup.release_batch_state(result, blocking=True) == 2
+            assert not made & persisted()
 
     def test_simhash_finds_identical_docs(self, spark, documents):
         copies = documents.limit(3).withColumn("doc_id", F.col("doc_id") + 100000)

@@ -4,8 +4,9 @@ the same sf dir, and ``tools/check_oracles.compare`` — the exact check
 the standalone sweep applies — must report no problem.
 
 ``GATED`` is the ANN family (semantic dedup, the IVF / PQ / SQ8 tiers,
-the partitioned index lifecycle, cell diagnostics). Covering the whole
-registry is one line: ``GATED = sorted(queries())``."""
+the partitioned index lifecycle, cell diagnostics) and the two MinHash
+miners (all-pairs and batch-vs-corpus). Covering the whole registry is
+one line: ``GATED = sorted(queries())``."""
 
 from __future__ import annotations
 
@@ -23,7 +24,7 @@ GATED = """
     dedup_semdedup ann_ivf_topk ann_ivfpq_topk ann_pq_topk ann_sq8_topk
     ann_pca_sq8_search ann_ivfpq_partitioned_search ann_filtered_pq_search
     ann_index_rebalance_search streaming_index_ingest ann_cell_occupancy
-    sample_cluster_balanced ann_ivf_lloyd_step
+    sample_cluster_balanced ann_ivf_lloyd_step dedup_minhash_lsh dedup_incremental
 """.split()
 
 

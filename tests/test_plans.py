@@ -703,3 +703,20 @@ class TestPlanAudits:
             "dedup_duplicated_lines",
         ):
             assert_no_cartesian(QUERIES[name](spark, "/root/testdata/sf0.001"))
+
+    def test_minhash_lsh_plan_reads_one_cached_table(self, spark):
+        # the shingle-set table is the MinHash miner's one materialized
+        # table, read by both the signature aggregate and the verify; the
+        # candidate generator stays an equi-join
+        from conftest import SF_DIR
+
+        from aws_data_wrangler_spark.operators import dedup
+        from aws_data_wrangler_spark.plans import QUERIES
+        from aws_data_wrangler_spark.plans.audit import assert_no_cartesian, cached_relations
+
+        pairs = QUERIES["dedup_minhash_lsh"](spark, SF_DIR)
+        try:
+            assert cached_relations(pairs) == 1
+            assert_no_cartesian(pairs)
+        finally:
+            dedup.release_batch_state(pairs)
