@@ -12,11 +12,11 @@ Eight strategies, all shuffle-disciplined for 100 TB:
 - MinHash + LSH: one materialized per-row shingle-set table (id, sh)
   feeds both the per-doc signature (k xxhash64 slots, one codegen
   groupBy) and the exact-Jaccard verify; candidate pairs from an
-  equi-join on (band, band-hash) buckets; the verify broadcasts the
-  distinct candidate ids only and shuffles only candidate documents'
-  sets — output precision 1.0, recall governed by (bands, rows). Rows
-  sharing an id are one document. The result carries its set table
-  for ``release_batch_state``.
+  equi-join on (band, band-hash) buckets, materialized once; the
+  verify broadcasts the distinct candidate ids only and shuffles only
+  candidate documents' sets — output precision 1.0, recall governed by
+  (bands, rows). Rows sharing an id are one document. The result
+  carries its set and candidate tables for ``release_batch_state``.
   Incremental batch-vs-corpus variant with a persistable corpus-state
   artifact and the same per-batch cache hygiene.
 - SimHash: 64-bit signature from per-token hash bit votes; candidate
@@ -254,14 +254,23 @@ def _shingle_overlap(df, id_col, text_col, n, max_doc_frequency):
     pair space is computed ONCE either way).
 
     Returns ``(sizes, common, caches)``: the shingle table backs three
-    plan references (sizes + both self-join branches) so it is cached
-    here, and the live handle is surfaced through ``caches`` so the
-    pair miners can record it on their results for
-    ``release_batch_state`` — without the handle a long-running loop
-    that mines pair tables repeatedly leaks one corpus-sized shingle
-    cache per call into executor storage and leans on LRU eviction.
+    plan references (sizes + both self-join branches) so it is
+    materialized here as a lazy local checkpoint (adaptive execution
+    reuses the shingle-keyed exchange above it for both join sides,
+    which it never does above a cache scan), and the live handle is
+    surfaced through ``caches`` so the pair miners can record it on
+    their results for ``release_batch_state`` — without the handle a
+    long-running loop that mines pair tables repeatedly leaks one
+    corpus-sized shingle table per call into executor storage and
+    leans on LRU eviction. As with any local checkpoint, the table's
+    blocks live only on the executors: losing one fails the query
+    instead of recomputing the table. With a ``max_doc_frequency`` cap
+    the document-frequency groupBy below the checkpoint runs when this
+    is called, before any action on the miner's result.
     """
-    shingles = word_shingles(df, id_col, text_col, n, max_doc_frequency).cache()
+    shingles = word_shingles(df, id_col, text_col, n, max_doc_frequency).localCheckpoint(
+        eager=False
+    )
     sizes = shingles.groupBy(id_col).agg(F.count(F.lit(1)).alias("set_size"))
     left = shingles.toDF("id_a", "shingle")
     right = shingles.toDF("id_b", "shingle")
@@ -354,9 +363,25 @@ def minhash_signatures(
     return shingles.groupBy(id_col).agg(F.expr(f"array({slots})").alias("sig"))
 
 
-def _banded_rows(sig: DataFrame, id_col: str, num_hashes: int, bands: int) -> DataFrame:
-    """(id, band, bucket) rows: signature split into ``bands`` bands of
-    ``num_hashes/bands`` slots, each band hashed to one bucket key."""
+def _bucket_pairs(left: DataFrame, right: DataFrame, left_id: str, right_id: str) -> DataFrame:
+    """(left_id, right_id) rows, one per band in which a document of
+    ``left`` and one of ``right`` (two ``_banded_rows`` tables) share a
+    bucket: the LSH candidate generator, an equi-join on (band, bucket)
+    whose fan-out is the bucket size. The MinHash miners checkpoint its
+    distinct pairs, so their result plans show only a scan of the
+    checkpoint; a plan audit of the candidate join reads this frame."""
+    return (
+        left.toDF(left_id, "band", "bucket")
+        .join(right.toDF(right_id, "band", "bucket"), ["band", "bucket"])
+        .select(left_id, right_id)
+    )
+
+
+def _banded_rows(shingles: DataFrame, id_col: str, num_hashes: int, bands: int) -> DataFrame:
+    """(id, band, bucket) rows of hashed (id, shingle) rows: the MinHash
+    signature split into ``bands`` bands of ``num_hashes/bands`` slots,
+    each band hashed to one bucket key."""
+    sig = minhash_signatures(shingles, id_col, num_hashes, prehashed=True)
     rows_per_band = num_hashes // bands
     buckets = ", ".join(
         "xxhash64("
@@ -416,12 +441,7 @@ def minhash_corpus_state(
     value exactly at the decision boundary.
     """
     shingles = word_shingles(corpus_df, id_col, text_col, n, None, hashed=True)
-    band_rows = _banded_rows(
-        minhash_signatures(shingles, id_col, num_hashes, prehashed=True),
-        id_col,
-        num_hashes,
-        bands,
-    )
+    band_rows = _banded_rows(shingles, id_col, num_hashes, bands)
     return MinHashCorpusState(shingles, band_rows, n, num_hashes, bands)
 
 
@@ -455,10 +475,20 @@ def minhash_lsh_incremental(
     artifact a production pipeline materializes ONCE — build them with
     ``minhash_corpus_state`` (persist as parquet / cache) and pass
     ``corpus_state=`` so each batch never touches corpus text; without
-    it they are derived inline from ``corpus_df`` and the caches
-    mark the reuse points. Batch-internal duplicates are out of scope
-    by design — run ``minhash_lsh_pairs`` on the batch for those.
+    it they are derived inline from ``corpus_df`` and the local
+    checkpoints mark the reuse points. Batch-internal duplicates are
+    out of scope by design — run ``minhash_lsh_pairs`` on the batch
+    for those.
     Identical ids on both sides are not special-cased.
+
+    The batch shingles, the candidate pairs and the inline corpus
+    shingles are lazy local checkpoints (see ``minhash_lsh_pairs`` for
+    why not caches). Their blocks live only on the executors: losing
+    one fails the result's action instead of recomputing the table.
+    Checkpointing the candidate pairs runs their shuffle stages — the
+    signature aggregates and the batch-vs-corpus bucket join — when
+    this is called, before any action on the result; the verify runs
+    on the result's first action.
 
     Ref: the reference dedupes per-dataset snapshots only
     (awswrangler has no incremental analog); semantics follow the
@@ -468,13 +498,13 @@ def minhash_lsh_incremental(
     if inline_corpus:
         if corpus_df is None:
             raise ValueError("pass either corpus_df or corpus_state")
-        sh_corpus, bands_corpus = minhash_corpus_state(
-            corpus_df, id_col, text_col, n, num_hashes, bands
-        )[:2]
         # shingles back both the signature agg and the verify sets (two
-        # references) → cache; the band table is joined exactly once →
-        # caching it would only add storage churn
-        sh_corpus = sh_corpus.cache()
+        # references) → a lazy local checkpoint (see minhash_lsh_pairs
+        # for why not a cache); the band table is joined exactly once →
+        # materializing it would only add storage churn
+        sh_corpus = word_shingles(corpus_df, id_col, text_col, n, None, hashed=True)
+        sh_corpus = sh_corpus.localCheckpoint(eager=False)
+        bands_corpus = _banded_rows(sh_corpus, id_col, num_hashes, bands)
     else:
         if isinstance(corpus_state, MinHashCorpusState):
             state_params = (corpus_state.n, corpus_state.num_hashes, corpus_state.bands)
@@ -501,26 +531,21 @@ def minhash_lsh_incremental(
                 "rebuild it with minhash_corpus_state — a mixed-format reuse "
                 "would yield empty intersections, not an error"
             )
-    sh_new = word_shingles(new_df, id_col, text_col, n, None, hashed=True).cache()
+    sh_new = word_shingles(new_df, id_col, text_col, n, None, hashed=True).localCheckpoint(
+        eager=False
+    )
     # the band tables are each joined exactly once (bipartite bucket
-    # join) → no cache; candidates back three downstream references →
-    # cache, populated on the result's first action. The live caches
+    # join) → not materialized; candidates back three downstream
+    # references → a lazy local checkpoint too. The live tables
     # (shingle tables + candidates) are recorded on the result so
     # ``release_batch_state(result)`` frees them once the batch is
     # consumed (the ingest-loop hygiene contract); caller-provided
     # corpus_state is the caller's to manage.
-    bands_new = _banded_rows(
-        minhash_signatures(sh_new, id_col, num_hashes, prehashed=True),
-        id_col,
-        num_hashes,
-        bands,
-    )
+    bands_new = _banded_rows(sh_new, id_col, num_hashes, bands)
     candidates = (
-        bands_new.toDF("new_id", "band", "bucket")
-        .join(bands_corpus.toDF("corpus_id", "band", "bucket"), ["band", "bucket"])
-        .select("new_id", "corpus_id")
+        _bucket_pairs(bands_new, bands_corpus, "new_id", "corpus_id")
         .distinct()
-        .cache()
+        .localCheckpoint(eager=False)
     )
     # no distinct on the probe keys: left_semi joins tolerate duplicate
     # broadcast-side keys, and each skipped distinct is one exchange
@@ -550,10 +575,10 @@ def minhash_lsh_incremental(
         )
         .filter(F.col("jaccard") >= threshold)
     )
-    # per-batch scratch caches backing the returned plan, recorded so a
+    # per-batch scratch tables backing the returned plan, recorded so a
     # long-running ingest loop can release them after consuming the
     # result (see release_batch_state) instead of leaking one shingle
-    # cache + one candidate cache per batch into executor storage
+    # table + one candidate table per batch into executor storage
     batch_caches = [sh_new, candidates]
     if inline_corpus:
         batch_caches.append(sh_corpus)
@@ -562,15 +587,15 @@ def minhash_lsh_incremental(
 
 
 def release_batch_state(result: DataFrame, blocking: bool = False) -> int:
-    """Release the per-batch caches behind a ``minhash_lsh_incremental``
+    """Release the per-batch tables behind a ``minhash_lsh_incremental``
     result (batch-side shingles, candidate pairs, and — when the corpus
-    state was derived inline — the corpus shingle cache), behind a
+    state was derived inline — the corpus shingles), behind a
     ``ngram_jaccard_pairs`` / ``containment_pairs`` result (the shared
-    ``_shingle_overlap`` shingle cache), behind a ``minhash_lsh_pairs``
-    result (its shingle-set table), behind a ``cluster_pairs`` result
-    (the surviving label snapshot) or behind a ``semdedup`` /
-    ``semdedup_prune`` result (the cell-assignment cache and the label
-    snapshot).
+    ``_shingle_overlap`` shingle table), behind a ``minhash_lsh_pairs``
+    result (its shingle-set and candidate tables), behind a
+    ``cluster_pairs`` result (the surviving label snapshot) or behind
+    a ``semdedup`` / ``semdedup_prune`` result (the cell-assignment
+    cache and the label snapshot).
 
     The production ingest loop is: build ``minhash_corpus_state`` once
     → per batch run ``minhash_lsh_incremental(corpus_state=...)``,
@@ -653,21 +678,28 @@ def minhash_lsh_pairs(
     bucket join replaces the all-pairs shingle join with a join whose
     fan-out is the bucket size.
 
-    Plan: ONE materialized per-row shingle-set table ``(id, sh
-    array<bigint>)`` (hashed shingles, distinct within the row; a lazy
-    ``localCheckpoint``) feeds both consumers — the signature aggregate
-    explodes it, and the verify explodes only the candidate documents'
-    rows of it. The one forced broadcast is the distinct candidate ids
-    (linear in candidate documents, never in pairs); it restricts the
-    set table to candidate documents before their sets are gathered,
-    so the corpus's sets never cross an exchange or a broadcast. The
-    joins that bring each pair's two sets together are left to AQE.
+    Plan: two materialized tables, each a lazy ``localCheckpoint``.
+    The per-row shingle-set table ``(id, sh array<bigint>)`` (hashed
+    shingles, distinct within the row) feeds both consumers — the
+    signature aggregate explodes it, and the verify explodes only the
+    candidate documents' rows of it. The candidate table ``(id_a,
+    id_b)`` holds the distinct band-bucket pairs; the verify reads it
+    twice (its ids, then the pairs), and without it each read planned
+    its own band self-join, ``distinct`` and signature aggregate, with
+    no exchange above the ``distinct`` for AQE to reuse. Checkpointing
+    it runs those shuffle stages when the operator is called; the
+    verify runs on the result's first action. The one forced broadcast
+    is the distinct candidate ids (linear in candidate documents, never
+    in pairs); it restricts the set table to candidate documents before
+    their sets are gathered, so the corpus's sets never cross an
+    exchange or a broadcast. The joins that bring each pair's two sets
+    together are left to AQE.
 
     Rows sharing an id are one document: the signature takes the min
     over all of their shingles and the verify unions their sets.
 
-    The result carries the set table as ``_sg_batch_caches``: consume
-    the result, then ``release_batch_state(result)`` frees it.
+    The result carries both tables as ``_sg_batch_caches``: consume the
+    result, then ``release_batch_state(result)`` frees them.
 
     Defaults: 48 slots × 16 bands (3 rows/band) — measured ~2× faster
     end-to-end than 64×16 with P(candidate | j=0.8) ≈ 0.99997 and
@@ -686,23 +718,23 @@ def minhash_lsh_pairs(
     # band self-join would run the signature aggregate once per side and
     # the plan one cache-materialization job per reference. Above a
     # checkpoint scan identical exchanges are reused: the signature
-    # aggregate and the candidate pipeline each run once however often
-    # the verify references them. As with any local checkpoint, its
-    # blocks live only on the executors: losing one fails the call
-    # instead of recomputing the table.
+    # aggregate runs once for both sides of the band self-join. As with
+    # any local checkpoint, its blocks live only on the executors:
+    # losing one fails the call instead of recomputing the table.
     sets = _shingle_sets(df, id_col, text_col, n, hashed=True).localCheckpoint(eager=False)
     shingles = sets.select(F.col(id_col), F.explode("sh").alias("shingle"))
     if max_doc_frequency is not None:
         shingles = shingles.join(_rare_shingles(shingles, max_doc_frequency), "shingle", "left_semi")
-    band_rows = _banded_rows(
-        minhash_signatures(shingles, id_col, num_hashes, prehashed=True), id_col, num_hashes, bands
-    )
+    band_rows = _banded_rows(shingles, id_col, num_hashes, bands)
+    # the candidate pairs are the second lazy local checkpoint: the
+    # verify reads them twice (their ids, and the pairs themselves), and
+    # without a materialized table each read re-plans its own band
+    # self-join, distinct and signature aggregate
     candidates = (
-        band_rows.toDF("id_a", "band", "bucket")
-        .join(band_rows.toDF("id_b", "band", "bucket"), ["band", "bucket"])
+        _bucket_pairs(band_rows, band_rows, "id_a", "id_b")
         .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
         .distinct()
+        .localCheckpoint(eager=False)
     )
     # exact-Jaccard verify of candidates only: the one forced broadcast
     # is the distinct candidate ids (linear in candidate documents),
@@ -725,7 +757,7 @@ def minhash_lsh_pairs(
     out = paired.select(
         "id_a", "id_b", trunc_digits(inter / union_sz).alias("jaccard")
     ).filter(F.col("jaccard") >= threshold)
-    out._sg_batch_caches = [sets]
+    out._sg_batch_caches = [sets, candidates]
     return out
 
 

@@ -4,6 +4,16 @@ Every operator here is pure ``pyspark.sql.functions`` — no Python
 UDFs — so the whole computation stays inside whole-stage codegen and
 scales linearly with executors. Each has an exact DuckDB-SQL oracle
 (see plans/oracles.py).
+
+Base-projection rule: an operator that derives several outputs from
+the same expensive per-document quantity (a regex scan, a split, a
+length) computes that quantity ONCE, into a hidden column of its own
+projection, and derives every output from the column. The optimizer
+keeps a projection whose non-trivial columns are read more than once
+apart from its consumers, so each regex runs once per document; inlined,
+the same feature expressions are re-evaluated in every output and every
+conditional branch that names them (``with_quality_score``'s token
+``split`` would appear 7 times in its executed plan).
 """
 
 from __future__ import annotations
@@ -107,34 +117,52 @@ def with_gopher_flags(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
+def _ratio(num: Column, den: Column) -> Column:
+    """``num / den`` in double, 0.0 when ``den`` is 0, NULL when it is NULL."""
+    return F.when(den == 0, F.lit(0.0)).otherwise(num.cast("double") / den.cast("double"))
+
+
 def with_quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Length / punctuation-ratio / stopword-ratio quality features and
     a composite score in [0, 1]. All arithmetic in double so the
-    DuckDB oracle reproduces it bit-for-bit."""
+    DuckDB oracle reproduces it bit-for-bit. NULL text scores NULL.
+
+    The four per-document counts (characters, whitespace tokens,
+    punctuation characters, stopword hits) are one base projection of
+    hidden columns; the ratios and the score read those columns (see
+    the module docstring)."""
     text = F.col(text_col)
-    n_chars = F.length(text).cast("double")
-    tokens = _ws_token_count(text).cast("double")
-    punct = F.length(text) - F.length(F.regexp_replace(text, r"[^\w\s]", ""))
     stop_pattern = r"\b(" + "|".join(STOPWORDS) + r")\b"
-    stops = F.size(F.regexp_extract_all(F.lower(text), F.lit(stop_pattern), 0)).cast("double")
-    punct_ratio = F.when(n_chars > 0, punct.cast("double") / n_chars).otherwise(F.lit(0.0))
-    stop_ratio = F.when(tokens > 0, stops / tokens).otherwise(F.lit(0.0))
-    mean_word_len = F.when(tokens > 0, n_chars / tokens).otherwise(F.lit(0.0))
-    length_score = F.least(n_chars / F.lit(500.0), F.lit(1.0))
+    counts = {
+        "__q_chars": F.length(text),
+        "__q_tokens": _ws_token_count(text),
+        "__q_punct": F.length(text) - F.length(F.regexp_replace(text, r"[^\w\s]", "")),
+        "__q_stops": F.size(F.regexp_extract_all(F.lower(text), F.lit(stop_pattern), 0)),
+    }
+    # outside ANSI mode size() of a NULL array is -1, not NULL
+    base = {name: F.when(text.isNotNull(), count) for name, count in counts.items()}
+    n_chars, tokens, punct, stops = (F.col(c) for c in base)
+    punct_ratio = _ratio(punct, n_chars)
+    stop_ratio = _ratio(stops, tokens)
     score = trunc_digits(
-        F.lit(0.4) * length_score
+        F.lit(0.4) * F.least(n_chars.cast("double") / F.lit(500.0), F.lit(1.0))
         + F.lit(0.3) * F.least(stop_ratio * 5.0, F.lit(1.0))
         + F.lit(0.3) * (F.lit(1.0) - F.least(punct_ratio * 10.0, F.lit(1.0)))
     )
-    return df.withColumns(
-        {
-            "n_chars_q": n_chars.cast("bigint"),
-            "ws_tokens": tokens.cast("bigint"),
-            "punct_ratio": trunc_digits(punct_ratio),
-            "stopword_ratio": trunc_digits(stop_ratio),
-            "mean_word_len": trunc_digits(mean_word_len),
-            "quality_score": score,
-        }
+    return (
+        df.withColumns(base)
+        .withColumns(
+            {
+                "n_chars_q": n_chars.cast("bigint"),
+                "ws_tokens": tokens.cast("bigint"),
+                "punct_ratio": trunc_digits(punct_ratio),
+                "stopword_ratio": trunc_digits(stop_ratio),
+                "mean_word_len": trunc_digits(_ratio(n_chars, tokens)),
+                # least() skips NULLs, so NULL counts alone leave the score non-NULL
+                "quality_score": F.when(n_chars.isNotNull(), score),
+            }
+        )
+        .drop(*base)
     )
 
 
@@ -174,17 +202,26 @@ def with_lang_id(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Marker-stopword-profile language guess.
 
     Ties break to the alphabetically-first language, so the result is
-    deterministic and SQL-reproducible. Real deployments would swap in
-    a fastText-style model via a pandas UDF; the plumbing is identical.
+    deterministic and SQL-reproducible. NULL text guesses NULL. Real
+    deployments would swap in a fastText-style model via a pandas UDF;
+    the plumbing is identical.
+
+    One regex scan of the lowered text collects every marker word of
+    every language (a hidden base column); each language then counts
+    its own markers among those hits. Every match is a whole
+    ``\\b``-delimited word, so the hits are the same words a per-language
+    scan would find, and a word two languages share counts for both.
     """
-    lowered = F.lower(F.col(text_col))
-    score_cols = []
-    for lang, markers in LANG_MARKERS:
-        pattern = r"\b(" + "|".join(markers) + r")\b"
-        score_cols.append(
-            F.size(F.regexp_extract_all(lowered, F.lit(pattern), 0)).alias(f"score_{lang}")
-        )
-    scored = df.select("*", *score_cols)
+    markers = sorted({m for _, words in LANG_MARKERS for m in words})
+    pattern = r"\b(" + "|".join(markers) + r")\b"
+    hits = F.regexp_extract_all(F.lower(F.col(text_col)), F.lit(pattern), 0)
+    score_cols = [
+        F.aggregate(
+            "__lang_hits", F.lit(0), lambda acc, w: acc + w.isin(*words).cast("int")
+        ).alias(f"score_{lang}")
+        for lang, words in LANG_MARKERS
+    ]
+    scored = df.withColumn("__lang_hits", hits).select("*", *score_cols).drop("__lang_hits")
     # argmax with alphabetical tie-break (LANG_MARKERS is sorted):
     # array_position finds the FIRST maximum. Array-based instead of a
     # when/otherwise fold — the fold nests each score reference up to
@@ -193,10 +230,11 @@ def with_lang_id(df: DataFrame, text_col: str = "text") -> DataFrame:
     # curation pipeline's pinned filter).
     scores = F.array(*[F.col(f"score_{lang}") for lang, _ in LANG_MARKERS])
     names = F.array(*[F.lit(lang) for lang, _ in LANG_MARKERS])
-    best_idx = F.array_position(scores, F.array_max(scores))
-    return scored.withColumn(
-        "lang_pred", F.element_at(names, best_idx.cast("int"))
-    ).withColumn("lang_score", F.array_max(scores).cast("bigint"))
+    best = F.array_max(scores)
+    lang_pred = F.element_at(names, F.array_position(scores, best).cast("int"))
+    return scored.withColumn("lang_pred", F.when(best.isNotNull(), lang_pred)).withColumn(
+        "lang_score", best.cast("bigint")
+    )
 
 
 def unigram_surprisal(

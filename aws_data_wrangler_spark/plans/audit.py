@@ -19,6 +19,16 @@ def _executed_plan(df: DataFrame) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def final_plan(df: DataFrame) -> str:
+    """The physical plan adaptive execution settled on once ``df`` ran
+    (its current plan before then), without the initial plan that the
+    executed plan's text also carries."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        plan = plan.executedPlan()
+    return plan.toString()
+
+
 def plan_summary(df: DataFrame) -> Dict[str, Any]:
     """Summarize the physical plan into the facts that matter at scale.
 

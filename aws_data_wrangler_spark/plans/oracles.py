@@ -1137,6 +1137,30 @@ _LANG_SCORES = """
         len(regexp_extract_all(lower(text), '\\b(的|是|了|在|我)\\b')) AS score_zh
 """
 
+# argmax of _LANG_SCORES, ties to the alphabetically-first language;
+# NULL text (NULL scores) guesses NULL
+_LANG_PRED = """
+        CASE WHEN score_de IS NULL THEN NULL
+             WHEN score_de >= score_en AND score_de >= score_es
+                  AND score_de >= score_fr AND score_de >= score_zh THEN 'de'
+             WHEN score_en >= score_es AND score_en >= score_fr
+                  AND score_en >= score_zh THEN 'en'
+             WHEN score_es >= score_fr AND score_es >= score_zh THEN 'es'
+             WHEN score_fr >= score_zh THEN 'fr'
+             ELSE 'zh' END"""
+
+# the heuristic quality score over _QUALITY_EXPRS; least() skips NULLs,
+# so NULL text needs the explicit guard to score NULL
+_QUALITY_SCORE = """
+        CASE WHEN n_chars IS NOT NULL THEN
+            floor((0.4 * least(n_chars / 500.0, 1.0)
+                   + 0.3 * least(CASE WHEN tokens > 0 THEN stops / tokens
+                                      ELSE 0.0 END * 5.0, 1.0)
+                   + 0.3 * (1.0 - least(CASE WHEN n_chars > 0 THEN punct / n_chars
+                                             ELSE 0.0 END * 10.0, 1.0)))
+                  * 1000000.0) / 1000000.0
+        END"""
+
 # stratified sampling: same md5-prefix-vs-hex-threshold coin flip as
 # operators/sampling.py (thresholds generated from the same fractions)
 _SAMPLE_KEEP = (
@@ -1355,13 +1379,7 @@ def _quality_gate_sql(extra_ctes: str, join_src: str, stratum: str) -> str:
             SELECT doc_id, {_QUALITY_EXPRS}
             FROM documents
         ), q AS (
-            SELECT doc_id,
-                   floor((0.4 * least(n_chars / 500.0, 1.0)
-                          + 0.3 * least(CASE WHEN tokens > 0 THEN stops / tokens
-                                             ELSE 0.0 END * 5.0, 1.0)
-                          + 0.3 * (1.0 - least(CASE WHEN n_chars > 0 THEN punct / n_chars
-                                                    ELSE 0.0 END * 10.0, 1.0)))
-                         * 1000000.0) / 1000000.0 AS quality_score
+            SELECT doc_id, {_QUALITY_SCORE} AS quality_score
             FROM feats
         ), {_ENTROPY_CTES}, {_CLASSIFIER_CTES}, flagged AS (
             SELECT q.doc_id, q.quality_score,
@@ -1577,33 +1595,16 @@ ORACLES: Dict[str, str] = {
         WITH feats AS (
             SELECT doc_id, lang, source, text, {_QUALITY_EXPRS}
             FROM documents
-        ), ratios AS (
-            SELECT doc_id, lang, source, text,
-                   CASE WHEN tokens > 0 THEN stops / tokens ELSE 0.0 END AS stop_ratio_raw,
-                   CASE WHEN n_chars > 0 THEN punct / n_chars ELSE 0.0 END AS punct_ratio_raw,
-                   n_chars, tokens
-            FROM feats
         ), scored AS (
             SELECT doc_id, lang, source, text,
                    CAST(tokens AS BIGINT) AS ws_tokens,
-                   floor((0.4 * least(n_chars / 500.0, 1.0)
-                          + 0.3 * least(stop_ratio_raw * 5.0, 1.0)
-                          + 0.3 * (1.0 - least(punct_ratio_raw * 10.0, 1.0))) * 1000000.0)
-                       / 1000000.0 AS quality_score,
+                   {_QUALITY_SCORE} AS quality_score,
                    {_LANG_SCORES}
-            FROM ratios
+            FROM feats
         ), kept AS (
             SELECT doc_id, source, text, ws_tokens, quality_score
             FROM scored
-            WHERE quality_score >= 0.5
-              AND lang = CASE
-                    WHEN score_de >= score_en AND score_de >= score_es
-                         AND score_de >= score_fr AND score_de >= score_zh THEN 'de'
-                    WHEN score_en >= score_es AND score_en >= score_fr
-                         AND score_en >= score_zh THEN 'en'
-                    WHEN score_es >= score_fr AND score_es >= score_zh THEN 'es'
-                    WHEN score_fr >= score_zh THEN 'fr'
-                    ELSE 'zh' END
+            WHERE quality_score >= 0.5 AND lang = {_LANG_PRED}
         ), deduped AS (
             SELECT *, min(doc_id) OVER (
                 PARTITION BY md5(regexp_replace(lower(text), '[^a-z0-9 ]', '', 'g'))
@@ -2592,14 +2593,7 @@ ORACLES: Dict[str, str] = {
             SELECT doc_id, lang, {_LANG_SCORES}
             FROM documents
         )
-        SELECT doc_id, lang,
-               CASE WHEN score_de >= score_en AND score_de >= score_es
-                         AND score_de >= score_fr AND score_de >= score_zh THEN 'de'
-                    WHEN score_en >= score_es AND score_en >= score_fr
-                         AND score_en >= score_zh THEN 'en'
-                    WHEN score_es >= score_fr AND score_es >= score_zh THEN 'es'
-                    WHEN score_fr >= score_zh THEN 'fr'
-                    ELSE 'zh' END AS lang_pred,
+        SELECT doc_id, lang, {_LANG_PRED} AS lang_pred,
                CAST(greatest(score_de, score_en, score_es, score_fr, score_zh) AS BIGINT) AS lang_score
         FROM scores ORDER BY doc_id
     """,

@@ -226,7 +226,7 @@ class TestDedup:
         assert pairs.count() == 10
         made = persisted() - before
         assert made
-        assert dedup.release_batch_state(pairs, blocking=True) == 1
+        assert dedup.release_batch_state(pairs, blocking=True) == 2
         assert not made & persisted()
 
         rng = random.Random(3)
@@ -643,21 +643,24 @@ class TestDedup:
 
     def test_release_batch_state_covers_the_pair_miners(self, spark, documents):
         # the deferred r10 handle (VERDICT r10 #2): the shared
-        # _shingle_overlap core caches the shingle table; a loop mining
-        # pair tables must be able to release it per batch — persisted
-        # storage returns to the baseline after each release instead of
-        # growing one shingle cache per call
+        # _shingle_overlap core materializes the shingle table; a loop
+        # mining pair tables must be able to release it per batch —
+        # every RDD the call persisted is gone after each release
+        # instead of one shingle table piling up per call. Tracked by
+        # RDD id, not by count: the context cleaner may free earlier
+        # tests' unreleased local checkpoints at any moment
+        def persisted():
+            return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
         docs = documents.limit(40)
-        jsc = spark.sparkContext._jsc.sc()
-        baseline = jsc.getPersistentRDDs().size()
         for miner in (dedup.ngram_jaccard_pairs, dedup.containment_pairs):
+            before = persisted()
             result = miner(docs, threshold=0.8, max_doc_frequency=1000)
-            result.count()  # consume (populates the shingle cache)
-            assert jsc.getPersistentRDDs().size() > baseline
+            result.count()  # consume (populates the shingle table)
+            made = persisted() - before
+            assert made
             dedup.release_batch_state(result, blocking=True)
-            assert jsc.getPersistentRDDs().size() == baseline, (
-                "shingle cache leaked past release_batch_state"
-            )
+            assert not made & persisted(), "shingle table leaked past release_batch_state"
 
     def test_release_batch_state_reports_lost_handles(self, spark, documents):
         # ADVICE r11: a release call on a derived frame (handle dropped
@@ -2433,6 +2436,77 @@ class TestText:
         rows = {r["doc_id"]: r["lang_pred"] for r in text.with_lang_id(df).collect()}
         assert rows[1] == "en"
         assert rows[2] == "es"
+
+    # (text, de, en, es, fr, zh, lang_pred, lang_score, n_chars_q,
+    # ws_tokens, punct_ratio, stopword_ratio, mean_word_len,
+    # quality_score): values of the per-expression implementation that
+    # scanned the text once per language and re-evaluated each count in
+    # every output that used it
+    SCORED_EDGES = [
+        ("", 0, 0, 0, 0, 0, "de", 0, 0, 0, 0.0, 0.0, 0.0, 0.3),
+        ("   ", 0, 0, 0, 0, 0, "de", 0, 3, 0, 0.0, 0.0, 0.0, 0.3024),
+        (" \t\n ", 0, 0, 0, 0, 0, "de", 0, 4, 2, 0.0, 0.0, 2.0, 0.303199),
+        ("...!?", 0, 0, 0, 0, 0, "de", 0, 5, 1, 1.0, 0.0, 5.0, 0.004),
+        ("!!! ,,, ;;", 0, 0, 0, 0, 0, "de", 0, 10, 3, 0.8, 0.0, 3.333333, 0.008),
+        ("The the THE the. the,the", 0, 6, 0, 0, 0, "en", 6, 24, 5, 0.083333, 1.2, 4.8, 0.3692),
+        ("x_the the_x the1 _the", 0, 0, 0, 0, 0, "de", 0, 21, 4, 0.0, 0.0, 5.25, 0.316799),
+        ("的 是 了 在 我", 0, 0, 0, 0, 5, "zh", 5, 9, 5, 0.555555, 0.0, 1.8, 0.0072),
+        ("a的b 是是 我", 0, 0, 0, 0, 1, "zh", 1, 8, 3, 0.5, 0.0, 2.666666, 0.0064),
+        ("我的是了在", 0, 0, 0, 0, 0, "de", 0, 5, 1, 1.0, 0.0, 5.0, 0.004),
+        ("la las le les el los", 0, 0, 4, 3, 0, "es", 4, 20, 6, 0.0, 0.0, 3.333333, 0.316),
+        ("que la", 0, 0, 2, 2, 0, "es", 2, 6, 2, 0.0, 0.0, 3.0, 0.3048),
+        ("the", 0, 1, 0, 0, 0, "en", 1, 3, 1, 0.0, 1.0, 3.0, 0.6024),
+        ("der die das und ist nicht", 6, 0, 0, 0, 0, "de", 6, 25, 6, 0.0, 0.0, 4.166666, 0.32),
+        ("tab\tsep\tthe\tand", 0, 2, 0, 0, 0, "en", 2, 15, 4, 0.0, 0.5, 3.75, 0.612),
+        (
+            "Hello, world! This is a test of the quality score.",
+            0, 3, 0, 0, 0, "en", 3, 50, 10, 0.06, 0.4, 5.0, 0.459999,
+        ),
+    ]
+
+    def test_lang_id_and_quality_score_edge_values(self, spark):
+        df = spark.createDataFrame(
+            [(i, row[0]) for i, row in enumerate(self.SCORED_EDGES)], "doc_id long, text string"
+        )
+        out = text.with_quality_score(text.with_lang_id(df)).orderBy("doc_id")
+        assert out.dtypes[2:] == [
+            ("score_de", "int"), ("score_en", "int"), ("score_es", "int"),
+            ("score_fr", "int"), ("score_zh", "int"), ("lang_pred", "string"),
+            ("lang_score", "bigint"), ("n_chars_q", "bigint"), ("ws_tokens", "bigint"),
+            ("punct_ratio", "double"), ("stopword_ratio", "double"),
+            ("mean_word_len", "double"), ("quality_score", "double"),
+        ]
+        assert [tuple(r)[1:] for r in out.collect()] == self.SCORED_EDGES
+
+    def test_null_text_scores_null(self, spark):
+        # least() skips NULLs, so NULL text once scored 0.7 and passed a
+        # 0.5 quality gate; and the argmax over NULL scores guessed 'zh'
+        # (and outside ANSI mode size() of a NULL array is -1)
+        df = spark.createDataFrame([(1, None), (2, "the")], "doc_id long, text string")
+        ansi = spark.conf.get("spark.sql.ansi.enabled")
+        try:
+            for mode in ("true", "false"):
+                spark.conf.set("spark.sql.ansi.enabled", mode)
+                out = text.with_quality_score(text.with_lang_id(df))
+                rows = {r["doc_id"]: r for r in out.collect()}
+                assert all(rows[1][c] is None for c in out.columns[1:]), (mode, rows[1])
+                assert rows[2]["quality_score"] == 0.6024 and rows[2]["lang_pred"] == "en"
+        finally:
+            spark.conf.set("spark.sql.ansi.enabled", ansi)
+
+    def test_text_scores_evaluate_each_scan_once(self, spark, documents):
+        # the per-document counts are one base projection: inlined, the
+        # executed plan spelled out the stopword scan 2x, the punctuation
+        # strip 2x and the token split 7x, and language id scanned the
+        # text once per language
+        from aws_data_wrangler_spark.plans.audit import plan_summary
+
+        quality = plan_summary(text.with_quality_score(documents))["plan"]
+        assert quality.count("regexp_extract_all(") == 1
+        assert quality.count("regexp_replace(") == 1
+        assert quality.count("split(") == 1
+        lang = plan_summary(text.with_lang_id(documents))["plan"]
+        assert lang.count("regexp_extract_all(") == 1
 
     def test_chunk_tokens_windows(self, spark):
         words = " ".join(f"w{i}" for i in range(95))

@@ -4,9 +4,11 @@ the same sf dir, and ``tools/check_oracles.compare`` — the exact check
 the standalone sweep applies — must report no problem.
 
 ``GATED`` is the ANN family (semantic dedup, the IVF / PQ / SQ8 tiers,
-the partitioned index lifecycle, cell diagnostics) and the two MinHash
-miners (all-pairs and batch-vs-corpus). Covering the whole registry is
-one line: ``GATED = sorted(queries())``."""
+the partitioned index lifecycle, cell diagnostics), the two MinHash
+miners (all-pairs and batch-vs-corpus), the exact n-gram overlap miners
+(Jaccard, containment, clusters) and the text-scoring rows
+(language id, the quality gates, the curation pipeline). Covering the
+whole registry is one line: ``GATED = sorted(queries())``."""
 
 from __future__ import annotations
 
@@ -25,6 +27,8 @@ GATED = """
     ann_pca_sq8_search ann_ivfpq_partitioned_search ann_filtered_pq_search
     ann_index_rebalance_search streaming_index_ingest ann_cell_occupancy
     sample_cluster_balanced ann_ivf_lloyd_step dedup_minhash_lsh dedup_incremental
+    dedup_ngram_jaccard dedup_containment dedup_clusters
+    text_lang_id text_quality_gate text_domain_quality corpus_curation_pipeline
 """.split()
 
 
@@ -42,3 +46,39 @@ def test_query_matches_its_oracle(spark, duck, name):
     sdf = entry.queries()[name](spark, SF_DIR).toPandas()
     odf = duck.sql(entry.oracle_sql()[name]).df()
     assert check_oracles.compare(sdf, odf) == []
+
+
+def test_text_score_oracles_agree_on_edge_rows(spark):
+    # NULL, empty, whitespace- and punctuation-only text never occur in
+    # the sf documents; the operators and the oracle SQL must still
+    # agree on them (NULL text: NULL score and NULL language). ASCII
+    # only: DuckDB's \b and \w are ASCII, the JVM's are not
+    import duckdb
+    import pandas as pd
+
+    import __spark_entry__ as entry
+    from aws_data_wrangler_spark.operators import text
+    from aws_data_wrangler_spark.plans import oracles
+
+    texts = [
+        None, "", "   ", " \t\n ", "...!?", "The the THE the. the,the",
+        "x_the the_x the1 _the", "la las le les el los", "que la", "the",
+        "der die das und ist nicht", "Hello, world! This is a test of the quality score.",
+    ]
+    docs = pd.DataFrame({"doc_id": range(len(texts)), "lang": "en", "text": texts})
+    df = spark.createDataFrame(docs, "doc_id long, lang string, text string")
+    scored = text.with_quality_score(text.with_lang_id(df))
+    con = duckdb.connect()
+    con.register("documents", docs)
+    try:
+        lang = con.sql(entry.oracle_sql()["text_lang_id"]).df()
+        quality = con.sql(
+            f"SELECT doc_id, {oracles._QUALITY_SCORE} AS quality_score "
+            f"FROM (SELECT doc_id, {oracles._QUALITY_EXPRS} FROM documents)"
+        ).df()
+    finally:
+        con.close()
+    assert check_oracles.compare(
+        scored.select("doc_id", "lang", "lang_pred", "lang_score").toPandas(), lang
+    ) == []
+    assert check_oracles.compare(scored.select("doc_id", "quality_score").toPandas(), quality) == []

@@ -704,10 +704,11 @@ class TestPlanAudits:
         ):
             assert_no_cartesian(QUERIES[name](spark, "/root/testdata/sf0.001"))
 
-    def test_minhash_lsh_plan_reads_one_cached_table(self, spark):
-        # the shingle-set table is the MinHash miner's one materialized
-        # table, read by both the signature aggregate and the verify; the
-        # candidate generator stays an equi-join
+    def test_minhash_lsh_plan_reads_set_and_candidate_tables(self, spark):
+        # the MinHash miner materializes two tables: the shingle sets,
+        # read by the signature aggregate and the verify, and the
+        # candidate pairs, read twice by the verify (the candidate
+        # generator behind the second is audited in the next test)
         from conftest import SF_DIR
 
         from aws_data_wrangler_spark.operators import dedup
@@ -716,7 +717,61 @@ class TestPlanAudits:
 
         pairs = QUERIES["dedup_minhash_lsh"](spark, SF_DIR)
         try:
-            assert cached_relations(pairs) == 1
+            assert cached_relations(pairs) == 2
             assert_no_cartesian(pairs)
         finally:
             dedup.release_batch_state(pairs)
+
+    def test_minhash_candidate_generators_are_band_bucket_equi_joins(self, spark, monkeypatch):
+        # both MinHash miners checkpoint their distinct candidate pairs,
+        # so their result plans show only a scan of the checkpoint: audit
+        # the band-bucket join each one builds below its checkpoint
+        import re
+
+        from conftest import SF_DIR
+
+        from aws_data_wrangler_spark.operators import dedup
+        from aws_data_wrangler_spark.plans import QUERIES
+        from aws_data_wrangler_spark.plans.audit import assert_no_cartesian, plan_summary
+
+        built = []
+        bucket_pairs = dedup._bucket_pairs
+
+        def recording(*args):
+            built.append(bucket_pairs(*args))
+            return built[-1]
+
+        monkeypatch.setattr(dedup, "_bucket_pairs", recording)
+        equi_join = r"Join \[band#\d+, bucket#\d+L\], \[band#\d+, bucket#\d+L\], Inner"
+        for name in ("dedup_minhash_lsh", "dedup_incremental"):
+            del built[:]
+            result = QUERIES[name](spark, SF_DIR)
+            try:
+                assert len(built) == 1, name
+                assert_no_cartesian(built[0])
+                plan = plan_summary(built[0])["plan"]
+                assert re.search(equi_join, plan), f"{name}:\n{plan}"
+            finally:
+                if getattr(result, "_sg_batch_caches", None):
+                    dedup.release_batch_state(result)
+
+    def test_minhash_lsh_final_plan_runs_band_join_and_signatures_once(self, spark):
+        # over an inline candidate table the verify planned the band
+        # self-join twice and the 48-slot signature aggregate three times
+        # (no exchange above the candidate distinct to reuse)
+        import re
+
+        from conftest import SF_DIR
+
+        from aws_data_wrangler_spark.operators import dedup
+        from aws_data_wrangler_spark.plans import QUERIES
+        from aws_data_wrangler_spark.plans.audit import final_plan
+
+        pairs = QUERIES["dedup_minhash_lsh"](spark, SF_DIR)
+        try:
+            pairs.collect()
+            plan = final_plan(pairs)
+        finally:
+            dedup.release_batch_state(pairs)
+        assert len(re.findall(r"Join \[band#\d+, bucket#\d+L\]", plan)) <= 1, plan
+        assert len(re.findall(r"functions=\[min\(xxhash64\(", plan)) <= 1, plan
